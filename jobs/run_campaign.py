@@ -42,27 +42,11 @@ def main() -> None:
         "S1 path) instead of the synthetic frontier",
     )
     ap.add_argument(
-        "--host-state-mode",
-        default="auto",
-        choices=["auto", "dict", "table"],
-        help="politeness-state storage: driver dict + broadcast (dict), "
-        "catalog table merged atomically per wave (table, the 10^8-host "
-        "cluster path), or auto by pool host count",
-    )
-    ap.add_argument(
         "--robots-txt",
         default=None,
         help="parquet of (host, robots_txt) RAW robots.txt bodies; parsed "
         "via functions/robots.py (RFC 9309 subset) into the politeness "
         "dimension instead of the synthetic structured robots table",
-    )
-    ap.add_argument(
-        "--host-state-fold-every",
-        type=int,
-        default=16,
-        help="table mode: fold accumulated per-wave host-state deltas back "
-        "to one row per host every N waves (merge-on-read compaction "
-        "cadence); 0 disables folding",
     )
     ap.add_argument(
         "--image-sizes",
@@ -109,10 +93,9 @@ def main() -> None:
     if args.robots_txt:
         from visiblev8_crawler_spark.functions.robots import robots_dim_from_txt
 
-        # materialize the parse ONCE: the politeness join and table-mode
-        # state delta re-reference this frame every wave, and an unpinned
-        # plan would re-run the Python parse kernel over every body each
-        # time
+        # materialize the parse ONCE: the politeness join re-references
+        # this frame every wave, and an unpinned plan would re-run the
+        # Python parse kernel over every body each time
         robots = robots_dim_from_txt(
             spark.read.parquet(args.robots_txt)
         ).localCheckpoint(eager=True)
@@ -132,8 +115,6 @@ def main() -> None:
             default_budget=args.default_budget,
             salt_width=args.salt_width,
             wave_period_s=args.wave_period,
-            host_state_mode=args.host_state_mode,
-            host_state_fold_every=args.host_state_fold_every,
         ),
         stop_after_waves=args.stop_after_waves,
     )

@@ -179,3 +179,68 @@ def test_lsh_kernel_chunking_invariant():
     # chunking splits query rows, never the candidate axis, so the per-row
     # threshold (and thus the keep-set) is exactly chunk-invariant
     assert key(topk_full) == key(topk_chunked)
+
+
+def test_mih_kernel_chunk_split_matches_bruteforce():
+    """The rendezvous kernel splits block pairs whose candidate grid
+    exceeds _MIH_KERNEL_CHUNK (a scale-only branch the fixture corpus never
+    reaches). Forced here on clustered hashes whose largest block holds
+    between 9 and 100 rows: chunk 100 splits pairs along A only, chunk 8
+    must also split single B blocks larger than the chunk. Both must emit
+    exactly the brute-force pair set."""
+    from unittest import mock
+
+    import pyarrow as pa
+
+    from visiblev8_crawler_spark.plans import imageops as io
+
+    tau = io._PHASH_PAIR_TAU
+    rng = np.random.default_rng(11)
+    # 4 random 64-bit bases x 40 variants of <= 2 flipped bits each
+    bases = rng.integers(0, 2**63, size=4, dtype=np.int64)
+    flips = rng.integers(0, 64, size=(160, 2))
+    ph = np.repeat(bases, 40).astype(np.uint64)
+    for k in range(2):
+        keep = rng.random(160) < 0.6
+        ph ^= np.where(keep, np.uint64(1) << flips[:, k].astype(np.uint64), np.uint64(0))
+    ph = ph.view(np.int64)
+    gid = np.arange(160) // 2  # pairs of rows share a gid and never pair
+    item = np.arange(160) % 2
+
+    # the (band, key, z) entries _mih_pairs ships to the kernel
+    cols = {n: [] for n in ("gid", "item", "phash", "band", "key", "z")}
+    block_sizes = []
+    u = ph.view(np.uint64)
+    for b, pos in enumerate(io._mih_layout(tau)):
+        key = np.zeros(160, dtype=np.int64)
+        for j, p in enumerate(pos):
+            key |= ((u >> np.uint64(p)) & np.uint64(1)).astype(np.int64) << j
+        block_sizes.append(np.unique(key, return_counts=True)[1].max())
+        for m in io._probe_masks(len(pos), radius=1):
+            for n, v in (("gid", gid), ("item", item), ("phash", ph),
+                         ("band", np.full(160, b)), ("key", key), ("z", key ^ m)):
+                cols[n].append(v)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(np.concatenate(cols[n]).astype(np.int64)) for n in cols],
+        names=list(cols),
+    )
+    assert 8 < max(block_sizes) <= 100, block_sizes
+
+    def run(chunk):
+        with mock.patch.object(io, "_MIH_KERNEL_CHUNK", chunk):
+            out = list(io._mih_rendezvous_kernel(iter([batch]), tau))
+        return {
+            tuple(r.values()) for o in out for r in o.to_pylist()
+        }
+
+    want = set()
+    for a in range(160):
+        for b in range(160):
+            if gid[a] < gid[b]:
+                h = bin(int(u[a] ^ u[b])).count("1")
+                if h <= tau:
+                    want.add((int(gid[a]), int(item[a]), int(gid[b]), int(item[b]), h))
+    assert len(want) > 1000
+    assert run(io._MIH_KERNEL_CHUNK) == want
+    assert run(100) == want
+    assert run(8) == want

@@ -159,39 +159,6 @@ def test_balanced_sample_salted_two_phase(spark):
     assert p.count("Window") >= 2, p
 
 
-def test_select_wave_table_mode_no_forced_broadcast(spark, world):
-    """Cluster-path politeness (state_broadcast=False): with auto-broadcast
-    disabled, the selection plan must contain NO BroadcastHashJoin — a hint
-    on either per-host dimension (robots or the state table) would force
-    one regardless of size, which is exactly the unbounded-dimension
-    broadcast the table mode exists to avoid. (In normal runs AQE still
-    broadcasts genuinely-small sides at runtime.)"""
-    from visiblev8_crawler_spark import schemas
-    from visiblev8_crawler_spark.operators.dedup import prepare_frontier
-    from visiblev8_crawler_spark.operators.waves import salt_col, select_wave
-
-    frontier = spark.read.parquet(world["paths"]["frontier"])
-    robots = spark.read.parquet(world["paths"]["robots"])
-    prepared = prepare_frontier(frontier, robots).filter(F.col("reason").isNull())
-    pending = schemas.conform(
-        prepared.withColumn("salt", salt_col(F.col("canon_url"), 8)), schemas.PENDING
-    ).localCheckpoint(eager=True)
-    state = spark.createDataFrame(
-        [("host0.site0.example", 3.5, 2, 10, 1)], schemas.HOST_STATE
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p = _plan(
-            select_wave(
-                pending, robots, 3, 150, host_state=state, state_broadcast=False
-            )
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "BroadcastHashJoin" not in p, p
-
-
 def test_gopher_repetition_map_only(spark):
     """doc_gopher_repetition's 100 TB story is that it is embarrassingly
     parallel: one parquet scan, all fractions computed as JVM higher-order

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from visiblev8_crawler_spark import simulator
+from visiblev8_crawler_spark.operators.waves import robots_dim
 from visiblev8_crawler_spark.streaming import scheduler
 from visiblev8_crawler_spark.streaming.scheduler import CrawlConfig
 
@@ -30,6 +31,18 @@ def _crawl_order(cat):
         (r["canon_url"], r["wave_id"], r["order_in_wave"])
         for r in scheduler.crawl_order_df(cat).collect()
     }
+
+
+def _per_wave(cat):
+    return {
+        r["wave_id"]: r["n"]
+        for r in cat.read("fetches").groupBy("wave_id").agg(F.count("*").alias("n")).collect()
+    }
+
+
+def _fetch_rows(cat):
+    keys = ["canon_url", "attempt", "wave_id", "order_in_wave", "status"]
+    return {tuple(r[k] for k in keys) for r in cat.read("fetches").collect()}
 
 
 def test_crawl_delay_exceeding_period_still_drains(spark, world, tmp_path_factory):
@@ -117,7 +130,9 @@ def test_unused_credit_carries_across_waves(spark, world, tmp_path_factory):
 def test_failure_demotion_reduces_budget(spark, world, tmp_path_factory):
     """VERDICT r2 #5: a host that keeps failing gets demoted. All this
     host's URLs dangle (NOT_FOUND), so after wave 0's 8 failures the abuse
-    rule (failed >= 4 and failed > ok) cuts its cap to max(1, 8//4) = 2."""
+    rule (failed >= 4 and failed > ok) cuts its cap to max(1, 8//4) = 2.
+    A campaign killed after wave 0 and resumed must bind the demotion from
+    the ledger fold alone (scheduler.host_state_df) and crawl identically."""
     bad = "abusive.example"
     rows = [
         {"seq": i + 1, "url": f"https://{bad}/img/img_9999999{i:05d}",
@@ -140,16 +155,40 @@ def test_failure_demotion_reduces_budget(spark, world, tmp_path_factory):
     later = {w: n for w, n in sim_per_wave.items() if w > 0}
     assert later and all(n <= 2 for n in later.values()), sim_per_wave
 
+    images = spark.read.parquet(world["paths"]["images"])
+    cfg = CrawlConfig(batch_size=100)
     cat = scheduler.run_campaign(
         spark, str(tmp_path_factory.mktemp("cat_demote")), frontier, robots,
-        spark.read.parquet(world["paths"]["images"]), CrawlConfig(batch_size=100),
+        images, cfg,
     )
-    got_per_wave = {
-        r["wave_id"]: r["n"]
-        for r in cat.read("fetches").groupBy("wave_id").agg(F.count("*").alias("n")).collect()
-    }
-    assert got_per_wave == sim_per_wave
+    assert _per_wave(cat) == sim_per_wave
     assert _crawl_order(cat) == set(sim.crawl_order)
+
+    root = str(tmp_path_factory.mktemp("cat_demote_resume"))
+    killed = scheduler.run_campaign(
+        spark, root, frontier, robots, images, cfg, stop_after_waves=1
+    )
+    assert killed.watermark() == 0
+    resumed = scheduler.run_campaign(spark, root, frontier, robots, images, cfg)
+    assert _per_wave(resumed) == sim_per_wave
+    assert _crawl_order(resumed) == _crawl_order(cat) == set(sim.crawl_order)
+
+    # the resume fold equals the in-run state replayed wave by wave; credit
+    # doubles compared exactly (a demoted wave's credit is capped at 2, not 8)
+    fold = {
+        r["host"]: [r["credit"], r["last_wave"], r["ok"], r["failed"]]
+        for r in scheduler.host_state_df(resumed, robots).collect()
+    }
+    replay = scheduler._HostState([], robots_dim(robots).collect(), cfg)
+    stats = (
+        resumed.read("fetches").groupBy("wave_id", "host")
+        .agg(F.count("*").alias("n_sel"),
+             F.sum(F.when(F.col("status") == "OK", 1).otherwise(0)).alias("n_ok"))
+        .collect()
+    )
+    for w in sorted({r["wave_id"] for r in stats}):
+        replay.update(w, [r for r in stats if r["wave_id"] == w])
+    assert fold == replay.state
 
 
 def test_empty_wave_fast_forward_jumps(spark, world, tmp_path_factory):
@@ -221,11 +260,10 @@ def test_zero_cap_host_terminates_campaign(spark, world, tmp_path_factory):
     assert left == {dead}, left  # only the zero-cap host's rows remain
 
 
-def test_kill_resume_with_fractional_credit(spark, world, tmp_path_factory):
-    """Kill/resume across waves with FRACTIONAL carried credit: the resume
-    path re-derives host state by folding the fetch ledger
-    (scheduler.host_state_df), which must reproduce the in-run incremental
-    doubles exactly — final tables byte-equal to an uninterrupted run."""
+@pytest.fixture(scope="module")
+def frac(spark, world, tmp_path_factory):
+    """Two hosts, one with a fractional refill rate (Crawl-delay 7 s at a
+    60 s period), plus the uninterrupted campaign over them."""
     slow, fast = "frac.example", "quick.example"
     rows = [
         {"seq": i + 1,
@@ -242,31 +280,79 @@ def test_kill_resume_with_fractional_credit(spark, world, tmp_path_factory):
     frontier, robots, robots_by_host = _world(rows, robots_rows, spark)
     images = spark.read.parquet(world["paths"]["images"])
     cfg = CrawlConfig(batch_size=30)
-
     straight = scheduler.run_campaign(
         spark, str(tmp_path_factory.mktemp("cat_frac_a")), frontier, robots, images, cfg
     )
-    root = str(tmp_path_factory.mktemp("cat_frac_b"))
-    scheduler.run_campaign(
-        spark, root, frontier, robots, images, cfg, stop_after_waves=2
-    )
-    resumed = scheduler.run_campaign(spark, root, frontier, robots, images, cfg)
+    return {
+        "slow": slow, "rows": rows, "robots_by_host": robots_by_host,
+        "frontier": frontier, "robots": robots, "images": images, "cfg": cfg,
+        "straight": straight,
+    }
 
-    keys = ["canon_url", "attempt", "wave_id", "order_in_wave", "status"]
-    a = {tuple(r[k] for k in keys) for r in straight.read("fetches").collect()}
-    b = {tuple(r[k] for k in keys) for r in resumed.read("fetches").collect()}
-    assert a == b
+
+def test_kill_resume_with_fractional_credit(spark, world, frac, tmp_path_factory):
+    """Kill/resume across waves with FRACTIONAL carried credit: the resume
+    path re-derives host state by folding the fetch ledger
+    (scheduler.host_state_df), which must reproduce the in-run incremental
+    doubles exactly — final tables byte-equal to an uninterrupted run."""
+    inputs = (frac["frontier"], frac["robots"], frac["images"], frac["cfg"])
+    straight = frac["straight"]
+    root = str(tmp_path_factory.mktemp("cat_frac_b"))
+    scheduler.run_campaign(spark, root, *inputs, stop_after_waves=2)
+    resumed = scheduler.run_campaign(spark, root, *inputs)
+
+    assert _fetch_rows(straight) == _fetch_rows(resumed)
     # the fractional rate actually produced carried credit: some wave got
     # more slow-host rows than floor(60/7) = 8 would ever allow statelessly
     slow_per_wave = [
         r["n"]
         for r in straight.read("fetches")
-        .filter(F.col("host") == slow)
+        .filter(F.col("host") == frac["slow"])
         .groupBy("wave_id").agg(F.count("*").alias("n"))
         .collect()
     ]
     assert any(n > 8 for n in slow_per_wave), slow_per_wave
     sim = simulator.simulate_campaign(
-        rows, robots_by_host, world["images_by_id"], batch_size=30
+        frac["rows"], frac["robots_by_host"], world["images_by_id"], batch_size=30
     )
     assert _crawl_order(straight) == set(sim.crawl_order)
+
+
+def test_resume_catalog_with_committed_host_state_table(spark, frac, tmp_path_factory):
+    """A catalog from the era when politeness state could also live in a
+    committed ``host_state`` table, with its storage mode pinned in the
+    manifest meta, resumes on the driver-held state: the ledger equals the
+    uninterrupted run's, and the leftover manifest entries stay inert —
+    reads never look up their schema, compaction leaves them alone, and
+    snapshot expiry keeps their still-referenced files."""
+    from visiblev8_crawler_spark import schemas
+    from visiblev8_crawler_spark.catalog import ParquetCatalog
+
+    root = str(tmp_path_factory.mktemp("cat_frac_old"))
+    old = ParquetCatalog(
+        spark, root, {**scheduler.TABLE_SCHEMAS, "host_state": schemas.HOST_STATE}
+    )
+    frontier, robots, images = frac["frontier"], frac["robots"], frac["images"]
+    scheduler.run_campaign(
+        spark, root, frontier, robots, images, frac["cfg"], stop_after_waves=2
+    )
+    old.commit(
+        None,
+        appends={"host_state": scheduler.host_state_df(old, robots)},
+        meta={"host_state_mode": "table"},
+    )
+    state_rows = sorted(map(tuple, old.read("host_state").collect()))
+    assert len(state_rows) == 2
+
+    # maintenance fires during the resume: compaction every 2 waves, and
+    # expiry down to 2 snapshots with no age floor
+    cfg = CrawlConfig(
+        batch_size=30, compact_every=2, expire_keep_snapshots=2, expire_min_age_s=0.0
+    )
+    resumed = scheduler.run_campaign(spark, root, frontier, robots, images, cfg)
+
+    assert _fetch_rows(resumed) == _fetch_rows(frac["straight"])
+    assert scheduler.pending_df(resumed).count() == 0
+    assert resumed.replace_epoch("fetches") > 0, "compaction never ran"
+    assert len(resumed.snapshots()) < resumed.commit_seq(), "expiry never ran"
+    assert sorted(map(tuple, old.read("host_state").collect())) == state_rows

@@ -155,33 +155,21 @@ def join_politeness_dims(
     df: DataFrame,
     robots: DataFrame,
     host_state: DataFrame | None,
-    state_broadcast: bool = True,
 ) -> DataFrame:
     """LEFT-broadcast-join the robots and host-state dimensions onto ``df``
     (host-keyed), producing exactly the columns politeness_exprs reads.
     Two independent broadcast hash joins — never a robots ⋈ state pre-join,
     which (being full-outer) cannot broadcast and would drag a SortMergeJoin
-    + two exchanges into every wave.
-
-    ``state_broadcast=False`` drops the broadcast hint on BOTH per-host
-    dimensions (state and robots) — the cluster path, where the politeness
-    state is a catalog table whose host universe can outgrow broadcast
-    range (scheduler._TableHostState), and the robots dimension scales
-    with the same host universe; forcing either would be a forced
-    broadcast of an unbounded dimension. The joins then shuffle on host
-    (AQE still broadcasts genuinely-small sides at runtime), which an
-    Iceberg layout bucketed by host turns into storage-partitioned
-    joins."""
-    dims = robots_dim(robots)
-    out = df.join(F.broadcast(dims) if state_broadcast else dims, "host", "left")
+    + two exchanges into every wave. Both dimensions are per-host and the
+    state is driver-held (scheduler._HostState), so the driver's host-count
+    ceiling bounds what these broadcasts carry."""
+    out = df.join(F.broadcast(robots_dim(robots)), "host", "left")
     if host_state is None:
         for name, t in STATE_COLS:
             out = out.withColumn(name, F.lit(None).cast(t))
         return out
     state = host_state.select("host", *[n for n, _ in STATE_COLS])
-    if state_broadcast:
-        state = F.broadcast(state)
-    return out.join(state, "host", "left")
+    return out.join(F.broadcast(state), "host", "left")
 
 
 def with_host_budget(
@@ -193,14 +181,10 @@ def with_host_budget(
     wave_id: int = 0,
     demote_after_failures: int = DEMOTE_AFTER_FAILURES,
     demote_factor: int = DEMOTE_FACTOR,
-    state_broadcast: bool = True,
 ) -> DataFrame:
-    """Left-broadcast-join the per-host politeness dimension (robots ⋈
-    carried token-bucket state; one row per host — on a real cluster this
-    dimension lives as an Iceberg table and the join is storage-partitioned
-    instead of broadcast when the host universe outgrows broadcast range —
-    that is ``state_broadcast=False``, the _TableHostState path) onto
-    pending and evaluate the token-bucket budget at ``wave_id``.
+    """Left-broadcast-join the per-host politeness dimensions (robots and
+    the carried token-bucket state, one row per host each) onto pending and
+    evaluate the token-bucket budget at ``wave_id``.
     Unknown hosts get the default budget at the reference's global
     DELAY=1 s; hosts with no state yet start with an empty bucket that has
     accrued ``wave_id + 1`` waves of credit."""
@@ -208,7 +192,7 @@ def with_host_budget(
         wave_id, default_budget, wave_period_s, demote_after_failures, demote_factor
     )
     return (
-        join_politeness_dims(pending, robots, host_state, state_broadcast)
+        join_politeness_dims(pending, robots, host_state)
         .withColumn("host_budget", e["host_budget"])
         .drop("max_per_wave", "crawl_delay_s", "credit", "last_wave", "ok", "failed")
     )
@@ -220,7 +204,6 @@ def next_eligible_wave(
     host_state: DataFrame | None,
     default_budget: int = DEFAULT_BUDGET,
     wave_period_s: float = DEFAULT_WAVE_PERIOD_S,
-    state_broadcast: bool = True,
 ) -> int | None:
     """Fast-forward target for an empty wave: the earliest wave id at which
     some pending host's bucket reaches 1 credit. Only called when selection
@@ -237,7 +220,7 @@ def next_eligible_wave(
     max_waves. Returns None when pending has no rows or no pending host can
     ever become eligible (the scheduler then stops instead of spinning)."""
     hosts = join_politeness_dims(
-        pending.select("host").distinct(), robots, host_state, state_broadcast
+        pending.select("host").distinct(), robots, host_state
     ).filter(F.coalesce(F.col("max_per_wave"), F.lit(default_budget)) >= 1)
     delay = F.when(
         F.col("crawl_delay_s").isNull() | (F.col("crawl_delay_s") <= 0),
@@ -263,7 +246,6 @@ def select_wave(
     host_state: DataFrame | None = None,
     demote_after_failures: int = DEMOTE_AFTER_FAILURES,
     demote_factor: int = DEMOTE_FACTOR,
-    state_broadcast: bool = True,
 ) -> DataFrame:
     """Pick this wave's rows from pending (which already includes any
     retries — the scheduler unions them in). Returns pending columns +
@@ -273,7 +255,6 @@ def select_wave(
     cand = with_host_budget(
         pending, robots, default_budget, wave_period_s,
         host_state, wave_id, demote_after_failures, demote_factor,
-        state_broadcast,
     )
     if salt_width > 1:
         # phase 1: bound each host to <= salt_width*cap survivors. One hash

@@ -579,24 +579,6 @@ def _band_entries(emb: DataFrame, bands: int, r: int) -> DataFrame:
     )
 
 
-def _band_ids(emb: DataFrame, bands: int, r: int) -> DataFrame:
-    """(vec_id, band, sig) bucket entries — the id-only relation the
-    two-phase neardup plan shuffles (see _banded_neardup_spark)."""
-    axes = _band_axes(bands, r)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                _sig_expr_spark(F.col("embedding"), axes[i]).alias("sig"),
-            )
-            for i in range(bands)
-        ]
-    )
-    return emb.select("vec_id", F.explode(band_structs).alias("bs")).select(
-        "vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-
-
 def _banded_neardup_spark(spark, sf_dir, bands: int, r: int, tau: float) -> DataFrame:
     # Round-6 rewrite (guide §2.3 + §4.2; was the round-4 two-phase id-only
     # join): the bucket self-join materialized Σocc² candidate rows per band

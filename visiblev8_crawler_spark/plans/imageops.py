@@ -684,21 +684,27 @@ def _mih_rendezvous_kernel(batches: "Iterator[pa.RecordBatch]", tau: int):
     ca, cb = counts[bpa], counts[bpb]
     sa, sb = starts[bpa], starts[bpb]
     c = ca * cb
-    # split oversized block pairs along the A side so every chunk below
-    # is a run of WHOLE pairs bounded by _MIH_KERNEL_CHUNK candidates
+    # split oversized block pairs into sub-grids of at most
+    # _MIH_KERNEL_CHUNK candidates — along B too when one B block alone
+    # exceeds it — so every chunk below is a run of WHOLE sub-pairs. An
+    # own-block pair's sub-grids still tile its full grid, so the jj > ii
+    # filter keeps each unordered pair exactly once.
     big = np.flatnonzero(c > _MIH_KERNEL_CHUNK)
     if len(big):
-        keep_small = np.ones(len(pa), dtype=bool)
+        keep_small = np.ones(len(c), dtype=bool)
         keep_small[big] = False
         ex_sa, ex_ca, ex_sb, ex_cb, ex_tri = [], [], [], [], []
         for p_ in big:
-            rows = max(1, _MIH_KERNEL_CHUNK // int(cb[p_]))
-            for off in range(0, int(ca[p_]), rows):
-                ex_sa.append(int(sa[p_]) + off)
-                ex_ca.append(min(rows, int(ca[p_]) - off))
-                ex_sb.append(int(sb[p_]))
-                ex_cb.append(int(cb[p_]))
-                ex_tri.append(bool(tri[p_]))
+            n_a, n_b = int(ca[p_]), int(cb[p_])
+            cols = min(n_b, _MIH_KERNEL_CHUNK)
+            rows = max(1, _MIH_KERNEL_CHUNK // cols)
+            for off_a in range(0, n_a, rows):
+                for off_b in range(0, n_b, cols):
+                    ex_sa.append(int(sa[p_]) + off_a)
+                    ex_ca.append(min(rows, n_a - off_a))
+                    ex_sb.append(int(sb[p_]) + off_b)
+                    ex_cb.append(min(cols, n_b - off_b))
+                    ex_tri.append(bool(tri[p_]))
         sa = np.concatenate((sa[keep_small], np.asarray(ex_sa, dtype=np.int64)))
         ca = np.concatenate((ca[keep_small], np.asarray(ex_ca, dtype=np.int64)))
         sb = np.concatenate((sb[keep_small], np.asarray(ex_sb, dtype=np.int64)))

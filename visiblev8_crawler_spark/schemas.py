@@ -138,12 +138,10 @@ FETCHES = StructType(
 )
 
 # per-host politeness token bucket + abuse record (SURVEY §4.2.3) — a pure
-# fold of the fetches ledger per host (scheduler.host_state_df). Below the
-# broadcast threshold it is DERIVED state maintained in driver memory
-# (scheduler._HostState, never committed); above it, it is materialized as
-# the host_state catalog table, merged atomically with each wave's commit
-# (_TableHostState). credit/last_wave carry unused budget across waves;
-# ok/failed drive the failure-rate demotion (waves.politeness_exprs).
+# fold of the fetches ledger per host (scheduler.host_state_df), maintained
+# as DERIVED state in driver memory (scheduler._HostState, never committed).
+# credit/last_wave carry unused budget across waves; ok/failed drive the
+# failure-rate demotion (waves.politeness_exprs).
 HOST_STATE = StructType(
     [
         StructField("host", StringType()),

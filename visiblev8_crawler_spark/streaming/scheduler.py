@@ -42,6 +42,7 @@ depends on it.
 
 from __future__ import annotations
 
+import threading
 import time
 from dataclasses import dataclass
 
@@ -70,12 +71,6 @@ TABLE_SCHEMAS = {
     "rejected": schemas.REJECTED,
     "metrics": schemas.METRICS,
     "bloom": schemas.BLOOM_STATE,
-    # cluster-path politeness state (_TableHostState): per-wave deltas
-    # appended atomically WITH each wave's commit (latest-per-host resolved
-    # by host_state_view; periodically folded), so it can never be stale
-    # relative to the fetch ledger it summarizes. Absent in dict-mode
-    # campaigns.
-    "host_state": schemas.HOST_STATE,
 }
 
 
@@ -153,7 +148,8 @@ def host_state_df(
     """Re-derive the per-host politeness token bucket + abuse record from the
     committed fetch ledger (the resume path; same design rule as pending_df:
     host state is a PROJECTION of fetches, never a second sink — no per-wave
-    state table to write, compact, or reconcile).
+    state table to write, compact, or reconcile). run_campaign collects the
+    result into the driver-held _HostState.
 
     The bucket recurrence (waves.politeness_exprs) is a sequential fold per
     host over its (wave_id, n_selected, n_ok) history, so the replay is a
@@ -218,20 +214,19 @@ class _HostState:
 
     Driver-held, like the bloom shards (the north_rule's own "broadcast
     bloom" pattern): per-host aggregate state is orders of magnitude
-    smaller than the frontier (~50 B/host), and the selection plan consumes
-    it as a broadcast dimension either way — holding the authoritative copy
-    on the driver removes one checkpoint action + one aggregation job per
-    wave (measured 0.4 s/wave at local[8], the entire politeness overhead).
-    Past broadcast range (cfg.host_state_broadcast_max hosts) the
-    scheduler switches to _TableHostState — the state lives as a catalog
-    table merged atomically per wave; the update arithmetic below is the
-    exact Python mirror of waves.politeness_exprs /
-    simulator.simulate_campaign, so all implementations stay in
-    IEEE-double lockstep (dict-vs-table equivalence is tested
-    bit-identical). Resume re-derives the dict by folding the fetch
-    ledger (host_state_df) — state is still a projection of fetches."""
-
-    broadcast = True  # selection consumes as_df() as a broadcast dimension
+    smaller than the frontier, and the selection plan consumes it as a
+    broadcast dimension — holding the authoritative copy on the driver
+    removes one checkpoint action + one aggregation job per wave (measured
+    0.4 s/wave at local[8], the entire politeness overhead). The driver
+    therefore sets the campaign's host-count ceiling: this object plus the
+    robots dims retains ~500 B/host (~1.25 KB/host at peak while the resume
+    fold's rows are collected; CPython 3.11, ~25-char host names,
+    tracemalloc at 10^4-10^6 hosts), i.e. ~0.5 GB of driver memory per
+    million hosts. The update arithmetic below is the exact Python mirror
+    of waves.politeness_exprs / simulator.simulate_campaign, so they stay
+    in IEEE-double lockstep. Resume re-derives the dict by folding the
+    fetch ledger (host_state_df) — state is a projection of fetches, never
+    a committed table."""
 
     def __init__(self, rows, robots_rows, cfg: "CrawlConfig"):
         self.state = {
@@ -309,168 +304,6 @@ class _HostState:
             ]
 
 
-def host_state_view(cat: ParquetCatalog) -> DataFrame:
-    """Latest-per-host politeness state over the append-delta ``host_state``
-    table (merge-on-read): each wave appends rows only for the hosts it
-    touched, stamped with that wave id in ``last_wave``, so the current
-    state is max_by(last_wave) per host. Ties are impossible — a host gains
-    at most one row per wave, and a killed wave's unpublished set is
-    overwritten, never double-published."""
-    cols = [f.name for f in schemas.HOST_STATE.fields if f.name != "host"]
-    return (
-        cat.read("host_state")
-        .groupBy("host")
-        .agg(F.max_by(F.struct(*cols), F.col("last_wave")).alias("s"))
-        .select("host", "s.*")
-    )
-
-
-class _TableHostState:
-    """Cluster-path politeness state: the ``host_state`` catalog table,
-    updated by APPENDING a per-wave delta (touched hosts only) in the SAME
-    atomic commit as the wave it reflects — the Iceberg
-    MERGE-with-merge-on-read analog. This is the overflow path the
-    _HostState docstring promises: past broadcast range
-    (cfg.host_state_broadcast_max hosts) the per-host state neither lives
-    on the driver nor rides a broadcast — selection joins it shuffle-side
-    (state_broadcast=False; bucketed-by-host Iceberg layout makes that
-    storage-partitioned) — and the per-wave WRITE is O(hosts touched this
-    wave), never O(all hosts) (the round-4 first cut rewrote the whole
-    table per wave; at 10^8 hosts that rewrite would have been the new
-    per-wave bottleneck). Reads resolve latest-per-host via
-    host_state_view; the maintenance pass periodically folds the deltas
-    back to one row per host (fold_committed) so read cost stays bounded.
-    The update arithmetic is the SAME politeness_exprs the selection and
-    the dict path use, so all paths stay in IEEE-double lockstep (the
-    dict-vs-table equivalence test asserts bit-identical selection AND
-    final state).
-
-    Update recurrence per touched host (identical to _HostState.update):
-        eff        = min(credit + rate*(wave - last_wave), cap)   # exprs
-        credit'    = eff - n_sel
-        last_wave' = wave
-        ok'        = ok + n_ok;  failed' = failed + (n_sel - n_ok)
-    Untouched hosts simply keep their previous row live (no rewrite).
-    Hosts first seen this wave enter through the exprs' null defaults
-    (credit 0, last_wave -1) — exactly _HostState's .get default.
-
-    Crash safety: the delta is written inside the wave's atomic commit
-    (multi-table manifest swap), so a kill anywhere leaves state and
-    ledger at the same watermark; resume reads the committed table, or
-    falls back to the host_state_df ledger fold when the catalog has none
-    (e.g. a campaign started in dict mode) — the fold and the table view
-    are equal by construction.
-
-    Unlike the dict path, as_df applies NO relevance filter: the filter
-    only shrinks a broadcast, and here the join shuffles either way; the
-    full table yields identical budgets (the filter is provably exact)."""
-
-    broadcast = False  # selection must not force-broadcast this dimension
-
-    def __init__(self, cat: ParquetCatalog, robots: DataFrame, cfg: "CrawlConfig"):
-        self.cat = cat
-        self.robots = robots
-        self.cfg = cfg
-        self._bootstrap: DataFrame | None = None
-
-    def seed_from_fold(self, df: DataFrame) -> None:
-        """Adopt a ledger fold (host_state_df) as the pre-first-commit
-        state — used when the catalog has no host_state table yet. The
-        first wave's delta() carries it into the table as the base
-        generation."""
-        self._bootstrap = df.localCheckpoint(eager=True)
-
-    def _current(self) -> DataFrame:
-        if self._bootstrap is not None:
-            return self._bootstrap
-        return host_state_view(self.cat)
-
-    def as_df(self, spark: SparkSession) -> DataFrame:
-        return self._current()
-
-    def delta(self, spark: SparkSession, wave_id: int, fetches_path: str) -> DataFrame:
-        """This wave's state delta (lazy) — handed to the wave's commit as
-        ``appends={"host_state": ...}``. Rows for touched hosts only (plus,
-        on the very first table-mode commit, the bootstrap base — its rows
-        carry older last_wave stamps, so latest-wins resolves overlaps).
-        Reads only immutable inputs: the just-written (still unpublished)
-        wave parquet and the previous committed state."""
-        from ..operators.waves import join_politeness_dims, politeness_exprs
-
-        cfg = self.cfg
-        stats = (
-            spark.read.schema(schemas.FETCHES)
-            .parquet(fetches_path)
-            .groupBy("host")
-            .agg(
-                F.count("*").alias("n_sel"),
-                F.sum(F.when(F.col("status") == "OK", 1).otherwise(0)).alias("n_ok"),
-            )
-        )
-        old = self._current()
-        e = politeness_exprs(
-            wave_id, cfg.default_budget, cfg.wave_period_s,
-            cfg.demote_after_failures, cfg.demote_factor,
-        )
-        touched = join_politeness_dims(stats, self.robots, old, state_broadcast=False)
-        new_touched = touched.select(
-            "host",
-            (e["eff_credit"] - F.col("n_sel")).alias("credit"),
-            F.lit(wave_id).alias("last_wave"),
-            (F.coalesce(F.col("ok"), F.lit(0)) + F.col("n_ok")).alias("ok"),
-            (
-                F.coalesce(F.col("failed"), F.lit(0))
-                + (F.col("n_sel") - F.col("n_ok"))
-            ).alias("failed"),
-        )
-        if self._bootstrap is not None:
-            base = self._bootstrap.join(stats.select("host"), "host", "left_anti")
-            new_touched = base.unionByName(new_touched)
-        return schemas.conform(new_touched, schemas.HOST_STATE)
-
-    def on_committed(self) -> None:
-        """The wave commit published the delta; drop any bootstrap so reads
-        go to the catalog from now on."""
-        self._bootstrap = None
-
-    def fold_committed(self, min_file_sets: int = 2) -> bool:
-        """Fold accumulated deltas back to one row per host (the Iceberg
-        compaction of a merge-on-read table): replaces the table with
-        host_state_view's resolution. Same locking discipline as
-        catalog.compact — snapshot and commit under the writer lock, with
-        the expect_replaced guard as the structural backstop."""
-        from visiblev8_crawler_spark.catalog import ConcurrentReplaceError
-
-        cat = self.cat
-        with cat.writer_lock():
-            # bounded retry on ConcurrentReplaceError (same recovery as
-            # catalog.compact): a lock-free appender landing between the
-            # snapshot and the manifest swap aborts the rewrite; re-snapshot
-            # picks up its rows and tries again
-            for attempt in range(4):
-                expected = cat._load_manifest()["tables"].get("host_state", [])
-                if len(expected) < min_file_sets:
-                    return False
-                snap = cat.spark.read.schema(schemas.HOST_STATE).parquet(*expected)
-                cols = [f.name for f in schemas.HOST_STATE.fields if f.name != "host"]
-                folded = (
-                    snap.groupBy("host")
-                    .agg(F.max_by(F.struct(*cols), F.col("last_wave")).alias("s"))
-                    .select("host", "s.*")
-                )
-                try:
-                    cat.commit(
-                        None,
-                        replaces={"host_state": schemas.conform(folded, schemas.HOST_STATE)},
-                        expect_replaced={"host_state": expected},
-                    )
-                    return True
-                except ConcurrentReplaceError:
-                    if attempt == 3:
-                        raise
-        return True
-
-
 @dataclass
 class CrawlConfig:
     batch_size: int = 1000
@@ -505,21 +338,6 @@ class CrawlConfig:
     # 0 disables. Runs AFTER the wave commit, as its own atomic commit, so a
     # kill between them loses nothing.
     compact_every: int = 64
-    # politeness-state storage: "dict" = driver-held + broadcast dimension
-    # (measured ~zero wall cost; right up to millions of hosts at ~50
-    # B/host), "table" = host_state catalog table merged atomically per
-    # wave with shuffle-side selection join (_TableHostState; the 10^8-host
-    # path), "auto" = table iff the pool's distinct host count exceeds
-    # host_state_broadcast_max. Both paths produce bit-identical selection
-    # and state (equivalence-tested).
-    host_state_mode: str = "auto"
-    host_state_broadcast_max: int = 1_000_000
-    # table mode: fold the per-wave state deltas to one row per host every
-    # N waves. The merge-on-read view scans one delta set per wave since
-    # the last fold, so this bounds the view's file fan-in (and the
-    # latest-per-host dedup) at N sets — a tighter cadence than table
-    # compaction because EVERY selection pays the view cost.
-    host_state_fold_every: int = 16
     # snapshot retention: every commit keeps its manifest for read_at()
     # time travel; the compaction pass expires all but the newest N and
     # deletes data files referenced only by expired snapshots (Iceberg
@@ -615,65 +433,16 @@ def run_campaign(
     pending = pending_df(cat, salt_width).localCheckpoint(eager=True)
     # politeness state resumes from the ledger too (empty ledger -> empty
     # state): the distributed fold replays exactly what the in-run updates
-    # computed. Storage mode: driver dict + broadcast below the host-count
-    # threshold (the fold's per-host aggregate comes to the driver,
-    # bloom-shard pattern; see _HostState), catalog table merged per wave
-    # above it (_TableHostState).
-    mode = cfg.host_state_mode
-    if mode == "auto":
-        # mode pinning, as a ONE-WAY dict->table ratchet:
-        # approx_count_distinct's ±2-4% error around a pool sitting exactly
-        # at the threshold picks a mode nondeterministically across runs —
-        # harmless within one campaign (both modes are equivalence-tested)
-        # but a resume must never flip table->dict (losing the committed
-        # state table's authority) or oscillate at the boundary. A pinned
-        # "table" is final; a pinned "dict" still re-runs the census so a
-        # pool that GREW past broadcast range (add_seeds ingest) upgrades
-        # instead of driving a full-host-universe collect on the driver —
-        # the table bootstrap path (seed_from_fold below) makes the upgrade
-        # exact.
-        pinned = cat.meta("host_state_mode")
-        if pinned == "table":
-            mode = "table"
-        else:
-            # approx census: the threshold decision tolerates sketch error,
-            # and an exact distinct over a 10^10-row pool would shuffle
-            # every host string just to pick a storage mode
-            n_hosts = pool_df(cat).agg(
-                F.approx_count_distinct("host").alias("n")
-            ).collect()[0]["n"]
-            mode = "table" if n_hosts > cfg.host_state_broadcast_max else "dict"
-            if pinned == "dict" and mode == "dict":
-                pass  # unchanged; no re-pin commit needed
-            else:
-                cat.commit(None, meta={"host_state_mode": mode})
-    elif mode in ("dict", "table") and cat.meta("host_state_mode") != mode:
-        # an explicit flag overrides (both modes are equivalent); re-pin so
-        # a later auto resume stays on what actually ran last
-        cat.commit(None, meta={"host_state_mode": mode})
-    if mode == "table":
-        hstate: _HostState | _TableHostState = _TableHostState(cat, robots, cfg)
-        if cat.file_sets("host_state") == 0:
-            # no committed state (fresh campaign, or one started in dict
-            # mode): bootstrap from the ledger fold — equal to what the
-            # table would contain, by the three-way lockstep arithmetic
-            hstate.seed_from_fold(
-                host_state_df(
-                    cat, robots, cfg.default_budget, cfg.wave_period_s,
-                    cfg.demote_after_failures, cfg.demote_factor,
-                )
-            )
-    elif mode == "dict":
-        hstate = _HostState(
-            host_state_df(
-                cat, robots, cfg.default_budget, cfg.wave_period_s,
-                cfg.demote_after_failures, cfg.demote_factor,
-            ).collect(),
-            robots_dim(robots).collect(),
-            cfg,
-        )
-    else:
-        raise ValueError(f"unknown host_state_mode {cfg.host_state_mode!r}")
+    # computed, and its per-host aggregate comes to the driver (bloom-shard
+    # pattern; see _HostState)
+    hstate = _HostState(
+        host_state_df(
+            cat, robots, cfg.default_budget, cfg.wave_period_s,
+            cfg.demote_after_failures, cfg.demote_factor,
+        ).collect(),
+        robots_dim(robots).collect(),
+        cfg,
+    )
 
     wave_id = cat.watermark() + 1
     try:
@@ -701,7 +470,6 @@ def _wave_loop(
             break
         t0 = time.perf_counter()
         state_df = hstate.as_df(spark)
-        state_broadcast = getattr(hstate, "broadcast", True)
         # select_wave necessarily funnels through one partition to assign
         # order_in_wave (bounded <= batch_size rows); re-spread the wave so
         # the fetch UDF uses every core instead of one.
@@ -712,7 +480,6 @@ def _wave_loop(
                 host_state=state_df,
                 demote_after_failures=cfg.demote_after_failures,
                 demote_factor=cfg.demote_factor,
-                state_broadcast=state_broadcast,
             )
             .repartition(P, "canon_url")
             .persist()
@@ -739,8 +506,7 @@ def _wave_loop(
             if pending.isEmpty():
                 break
             nxt = next_eligible_wave(
-                pending, robots, state_df, cfg.default_budget, cfg.wave_period_s,
-                state_broadcast,
+                pending, robots, state_df, cfg.default_budget, cfg.wave_period_s
             )
             if nxt is None:  # no pending host can ever fetch (cap 0)
                 break
@@ -763,58 +529,41 @@ def _wave_loop(
             schemas.METRICS,
         )
 
-        # the atomic wave commit: appends only — nothing is rewritten. In
-        # table mode the politeness-state DELTA (touched hosts only) rides
-        # the SAME manifest swap (multi-table commit), so ledger and state
-        # can never disagree at a resume point; the delta plan reads only
-        # immutable inputs (the unpublished wave parquet + the previous
-        # committed state), so writing it inside the commit critical
-        # section is safe, and its cost is O(hosts touched this wave).
+        # the atomic wave commit: appends only — nothing is rewritten
         t_commit = time.perf_counter()
-        table_mode = isinstance(hstate, _TableHostState)
-        appends = {"metrics": metrics}
-        if table_mode:
-            appends["host_state"] = hstate.delta(spark, wave_id, fetches_path)
         cat.commit(
             f"wave={wave_id}",
-            appends=appends,
+            appends={"metrics": metrics},
             prewritten={"fetches": fetches_path},
             watermark=wave_id,
         )
-        if table_mode:
-            hstate.on_committed()
 
-        # dict mode only: per-host outcome aggregate for the politeness
-        # state — a 2-column columnar scan of the just-committed wave
-        # parquet, submitted on a background thread so it runs CONCURRENTLY
-        # with the pending-update checkpoint below and costs ~zero wall
-        # time (both read immutable committed data; Spark schedules jobs
-        # from separate threads fine)
-        import threading
-
+        # per-host outcome aggregate for the politeness state — a 2-column
+        # columnar scan of the just-committed wave parquet, submitted on a
+        # background thread so it runs CONCURRENTLY with the pending-update
+        # checkpoint below and costs ~zero wall time (both read immutable
+        # committed data; Spark schedules jobs from separate threads fine)
         stats_box: dict = {}
-        stats_thread = None
-        if not table_mode:
 
-            def _collect_stats(path=fetches_path, box=stats_box):
-                try:
-                    box["rows"] = (
-                        spark.read.schema(schemas.FETCHES)
-                        .parquet(path)
-                        .groupBy("host")
-                        .agg(
-                            F.count("*").alias("n_sel"),
-                            F.sum(
-                                F.when(F.col("status") == "OK", 1).otherwise(0)
-                            ).alias("n_ok"),
-                        )
-                        .collect()
+        def _collect_stats(path=fetches_path, box=stats_box):
+            try:
+                box["rows"] = (
+                    spark.read.schema(schemas.FETCHES)
+                    .parquet(path)
+                    .groupBy("host")
+                    .agg(
+                        F.count("*").alias("n_sel"),
+                        F.sum(
+                            F.when(F.col("status") == "OK", 1).otherwise(0)
+                        ).alias("n_ok"),
                     )
-                except BaseException as e:  # surfaced at join below
-                    box["err"] = e
+                    .collect()
+                )
+            except BaseException as e:  # surfaced at join below
+                box["err"] = e
 
-            stats_thread = threading.Thread(target=_collect_stats, daemon=True)
-            stats_thread.start()
+        stats_thread = threading.Thread(target=_collect_stats, daemon=True)
+        stats_thread.start()
 
         # incremental pending update (in-memory mirror of pending_df over the
         # new snapshot): drop this wave's rows, add this wave's retryable
@@ -844,13 +593,11 @@ def _wave_loop(
             .localCheckpoint(eager=True)
         )
         # politeness bucket + abuse record for the <= hosts-in-wave touched
-        # hosts — fed by the overlapped stats scan (dict mode; table mode
-        # already merged inside the commit)
-        if stats_thread is not None:
-            stats_thread.join()
-            if "err" in stats_box:
-                raise stats_box["err"]
-            hstate.update(wave_id, stats_box["rows"])
+        # hosts — fed by the overlapped stats scan
+        stats_thread.join()
+        if "err" in stats_box:
+            raise stats_box["err"]
+        hstate.update(wave_id, stats_box["rows"])
         selected.unpersist()
 
         # periodic maintenance: compaction is its own atomic commit after
@@ -861,14 +608,6 @@ def _wave_loop(
         # rejected one per add_seeds ingest — a long campaign's status and
         # resume reads would otherwise degrade linearly in set count. The
         # min_file_sets guard makes untouched tables a no-op.
-        if (
-            table_mode
-            and cfg.host_state_fold_every
-            and (wave_id + 1) % cfg.host_state_fold_every == 0
-        ):
-            # merge-on-read fold: deltas -> one row per host, so the
-            # selection-side view's dedup + file fan-in stay bounded
-            hstate.fold_committed(min_file_sets=2)
         if cfg.compact_every and (wave_id + 1) % cfg.compact_every == 0:
             for table in ("fetches", "metrics", "frontier_prepared", "rejected"):
                 cat.compact(table, min_file_sets=cfg.compact_every)

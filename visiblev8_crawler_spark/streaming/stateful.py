@@ -10,8 +10,8 @@ the update function sees each key's rows as pandas frames.
 
 Here the keyed state is per-host: cumulative fetch count and OK count —
 the live form of the politeness/abuse accounting the wave scheduler's
-demotion rule consumes (scheduler.host_state_df / _HostState: failed >=
-threshold and failed > ok cuts a host's cap). The two engines compute the
+demotion rule consumes (scheduler.host_state_df, held on the driver as
+_HostState: failed >= threshold and failed > ok cuts a host's cap). The two engines compute the
 SAME numbers from the same ledger — proven by
 tests/test_stateful.py::test_streaming_accounting_matches_scheduler_host_state,
 which streams a real campaign's per-wave fetch file sets through this
