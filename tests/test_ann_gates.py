@@ -311,6 +311,54 @@ def test_embedding_neardup_incremental_planted_delta_dup(spark):
     assert pairs == {(3, 8): 1.0}, pairs
 
 
+def test_embedding_neardup_incremental_nan_band_axis(spark):
+    """A NaN at a band axis takes Spark's sign rule on both sides of the
+    incremental op: `element_at(v, ax) > 0` is true for NaN in Spark (NaN
+    orders above every value), so the delta index and the corpus kernel
+    must set that bit too, or the op drops the NaN rows' band-0 pairs that
+    the full recompute (which keeps NaN cosines) emits. Rows 6 (corpus)
+    and 8 (delta) carry the NaN; rows 7 and 9 share their band-0 signature
+    only under Spark's rule."""
+    import math
+    import os
+    import tempfile
+
+    from visiblev8_crawler_spark.plans.annops import (
+        _DIM,
+        embedding_lsh_neardup_pairs_incremental,
+    )
+
+    def walsh(i):
+        return [
+            1.0 if bin(i & k).count("1") % 2 == 0 else -1.0 for k in range(_DIM)
+        ]
+
+    nan_row = [float("nan")] + [-1.0] * (_DIM - 1)
+    band0_twin = [1.0] + [-1.0] * 5 + [1.0] * (_DIM - 6)
+    # 10 vectors, cursor = (9+1)*8//10 = 8 -> ids 8,9 are the delta
+    rows = [(i, walsh(i), 0) for i in range(6)]
+    rows += [(6, nan_row, 0), (7, band0_twin, 0), (8, nan_row, 0), (9, band0_twin, 0)]
+    d = tempfile.mkdtemp(prefix="nbnan_")
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label long"
+    ).write.mode("overwrite").parquet(os.path.join(d, "embeddings.parquet"))
+
+    def pairs(df):  # NaN cosines cross the Arrow boundary as null
+        return {
+            (r["vec_a"], r["vec_b"]): None if c is None or math.isnan(c) else c
+            for r in df.collect()
+            for c in [r["cosine"]]
+        }
+
+    want = pairs(
+        _banded_neardup_spark(spark, d, bands=8, r=6, tau=0.30).filter(
+            F.col("vec_b") >= 8
+        )
+    )
+    assert {(6, 9), (7, 8)} <= set(want), want  # band-0 collisions via NaN
+    assert pairs(embedding_lsh_neardup_pairs_incremental(spark, d)) == want
+
+
 def test_knn_join_oracle_replica(spark):
     """embedding_knn_join parity: the DuckDB replica is the SAME LSH plan
     (generated from the same axis table, sequential-fold cosines), so the

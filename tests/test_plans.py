@@ -101,12 +101,13 @@ def test_tfidf_df_join_not_forced_broadcast(spark):
 
 
 def test_select_wave_with_host_state_adds_no_exchange(spark, world):
-    """Round 3: joining the carried politeness state must add at most ONE
-    broadcast hash join to the selection plan — never an extra
-    pending-sized exchange (the state frame is an Arrow LocalRelation)."""
+    """Round 3: joining the driver-computed budget dimension must add at
+    most ONE broadcast hash join to the selection plan — never an extra
+    pending-sized exchange (the budget frame is an Arrow LocalRelation)."""
     from visiblev8_crawler_spark import schemas
     from visiblev8_crawler_spark.operators.dedup import prepare_frontier
-    from visiblev8_crawler_spark.operators.waves import salt_col, select_wave
+    from visiblev8_crawler_spark.operators.waves import robots_dim, salt_col, select_wave
+    from visiblev8_crawler_spark.streaming.scheduler import CrawlConfig, _HostState
 
     frontier = spark.read.parquet(world["paths"]["frontier"])
     robots = spark.read.parquet(world["paths"]["robots"])
@@ -114,19 +115,25 @@ def test_select_wave_with_host_state_adds_no_exchange(spark, world):
     pending = schemas.conform(
         prepared.withColumn("salt", salt_col(F.col("canon_url"), 8)), schemas.PENDING
     ).localCheckpoint(eager=True)
-    state = spark.createDataFrame(
-        [("host0.site0.example", 3.5, 2, 10, 1)], schemas.HOST_STATE
+    # a demoted host: its budget always differs from the robots default
+    hs = _HostState(
+        [{"host": "host0.site0.example", "credit": 3.5, "last_wave": 2, "ok": 1,
+          "failed": 10}],
+        robots_dim(robots).collect(), CrawlConfig(),
     )
-    p = _plan(select_wave(pending, robots, 3, 150, host_state=state))
+    budgets = hs.budget_df(spark, 3)
+    assert budgets is not None
+    p = _plan(select_wave(pending, robots, 3, 150, budgets=budgets))
     hash_exchanges = p.count("Exchange hashpartitioning")
     assert hash_exchanges <= 2, f"{hash_exchanges} hash exchanges:\n{p}"
-    assert p.count("BroadcastHashJoin") == 2, p  # robots + state, both broadcast
+    assert p.count("BroadcastHashJoin") == 2, p  # robots + budgets, both broadcast
     assert "SortMergeJoin" not in p, p
 
 
 def test_select_wave_single_pending_exchange(spark, world):
-    """PLANS.md §1: phase 1 is the only pending-sized exchange; the budget
-    join broadcasts the robots dimension."""
+    """PLANS.md §1: phase 1 is the only pending-sized exchange; with no
+    driver budgets (no host delay-bound or demoted) the only join is the
+    broadcast robots dimension."""
     from visiblev8_crawler_spark import schemas
     from visiblev8_crawler_spark.operators.dedup import prepare_frontier
     from visiblev8_crawler_spark.operators.waves import salt_col, select_wave
@@ -137,12 +144,12 @@ def test_select_wave_single_pending_exchange(spark, world):
     pending = schemas.conform(
         prepared.withColumn("salt", salt_col(F.col("canon_url"), 8)), schemas.PENDING
     ).localCheckpoint(eager=True)
-    p = _plan(select_wave(pending, robots, 0, 150))
+    p = _plan(select_wave(pending, robots, 0, 150, budgets=None))
     # exchanges: phase-1 (host,salt) hash + phase-2 host hash + the final
     # single-partition window for order_in_wave; anything more is a leak
     hash_exchanges = p.count("Exchange hashpartitioning")
     assert hash_exchanges <= 2, f"{hash_exchanges} hash exchanges:\n{p}"
-    assert "BroadcastHashJoin" in p, "robots budget join must broadcast"
+    assert p.count("BroadcastHashJoin") == 1, "robots budget join must broadcast"
     assert "SortMergeJoin" not in p, p
 
 

@@ -7,8 +7,8 @@ assertions on the pacing itself."""
 import pytest
 from pyspark.sql import functions as F
 
-from visiblev8_crawler_spark import simulator
-from visiblev8_crawler_spark.operators.waves import robots_dim
+from visiblev8_crawler_spark import schemas, simulator
+from visiblev8_crawler_spark.operators.waves import bucket, robots_dim, select_wave
 from visiblev8_crawler_spark.streaming import scheduler
 from visiblev8_crawler_spark.streaming.scheduler import CrawlConfig
 
@@ -177,9 +177,11 @@ def test_failure_demotion_reduces_budget(spark, world, tmp_path_factory):
     # doubles compared exactly (a demoted wave's credit is capped at 2, not 8)
     fold = {
         r["host"]: [r["credit"], r["last_wave"], r["ok"], r["failed"]]
-        for r in scheduler.host_state_df(resumed, robots).collect()
+        for r in scheduler.host_state_df(resumed, robots, cfg).collect()
     }
-    replay = scheduler._HostState([], robots_dim(robots).collect(), cfg)
+    replay = scheduler._HostState(
+        [], robots_dim(robots, cfg.default_budget).collect(), cfg
+    )
     stats = (
         resumed.read("fetches").groupBy("wave_id", "host")
         .agg(F.count("*").alias("n_sel"),
@@ -189,6 +191,120 @@ def test_failure_demotion_reduces_budget(spark, world, tmp_path_factory):
     for w in sorted({r["wave_id"] for r in stats}):
         replay.update(w, [r for r in stats if r["wave_id"] == w])
     assert fold == replay.state
+
+
+# the budget grid: robots max_per_wave x Crawl-delay, and carried states
+# (credit, ok, failed) — None = never crawled
+GRID_M = (None, 0, 1, 8, 25)
+GRID_DELAY = (None, 0, 0.5, 1, 5, 150, 600)
+GRID_STATES = {
+    "fresh": None,
+    "frac": (0.37, 3, 1),
+    "demoted": (0.5, 1, 5),
+    "recovered": (1.25, 9, 5),
+}
+
+
+def _grid(cfg, last_wave):
+    """(state rows, robots_dim rows, {host: (state, m, delay)}) for every
+    grid host, plus one host per state that has no robots row."""
+    hosts = {
+        f"{kind}.m{m}.d{d}.example": (st, m, d)
+        for kind, st in GRID_STATES.items() for m in GRID_M for d in GRID_DELAY
+    }
+    hosts.update({f"{kind}.unknown.example": (st, None, None)
+                  for kind, st in GRID_STATES.items()})
+    state_rows = [
+        {"host": h, "credit": st[0], "last_wave": last_wave, "ok": st[1],
+         "failed": st[2]}
+        for h, (st, _m, _d) in hosts.items() if st is not None
+    ]
+    robots_rows = [
+        {"host": h, "max_per_wave": cfg.default_budget if m is None else m,
+         "crawl_delay_s": d}
+        for h, (_st, m, d) in hosts.items() if "unknown" not in h
+    ]
+    return state_rows, robots_rows, hosts
+
+
+def _assert_budgets_exact(hs, hosts, wave_id, last_wave):
+    """select_wave's resolution — the emitted budget, else the robots
+    max_per_wave, else unknown_budget — equals waves.bucket for every host,
+    and only hosts whose budget can differ from that fallback are emitted."""
+    cfg = hs.cfg
+    emitted = hs.budgets(wave_id)
+    unknown_budget = hs.bucket_of(None, wave_id)[1]
+    differ = set()
+    for h, (st, m, d) in hosts.items():
+        robots_m = None if "unknown" in h else (cfg.default_budget if m is None else m)
+        m_res = cfg.default_budget if robots_m is None else robots_m
+        credit, ok, failed = st if st is not None else (0.0, 0, 0)
+        last = last_wave if st is not None else -1
+        want = bucket(credit, last, ok, failed, wave_id, m_res, d, cfg.wave_period_s)[1]
+        got = emitted.get(h, unknown_budget if robots_m is None else robots_m)
+        assert got == want, (h, wave_id, cfg.wave_period_s, got, want)
+        rate = cfg.wave_period_s / (d if d else 1.0)
+        cap = max(m_res, 1)
+        if st is not None:
+            if (failed >= cfg.demote_after_failures and failed > ok) or rate < cap:
+                differ.add(h)
+        elif robots_m is not None and rate * (wave_id + 1) < cap:
+            differ.add(h)
+    assert set(emitted) == differ, (wave_id, cfg.wave_period_s)
+
+
+def test_budget_dimension_exact_over_grid():
+    """No Spark: the driver-computed budget dimension, with select_wave's
+    fallbacks, reproduces waves.bucket for every grid host at waves 0-12,
+    at the default 60 s period and at 10 s (where hosts with the default
+    Crawl-delay — unknown hosts included — are delay-bound). One driver
+    state walks the waves in order, as a run does (fresh buckets drop out
+    of the dimension once full); a second is built per wave with every
+    crawled host last fetched the wave before."""
+    for period in (60.0, 10.0):
+        cfg = CrawlConfig(wave_period_s=period)
+        rows, robots_rows, hosts = _grid(cfg, last_wave=-1)
+        hs = scheduler._HostState(rows, robots_rows, cfg)
+        for w in range(13):
+            _assert_budgets_exact(hs, hosts, w, last_wave=-1)
+        for w in range(13):
+            rows, robots_rows, hosts = _grid(cfg, last_wave=w - 1)
+            per_wave = scheduler._HostState(rows, robots_rows, cfg)
+            _assert_budgets_exact(per_wave, hosts, w, last_wave=w - 1)
+
+
+def test_select_wave_resolves_driver_budgets(spark):
+    """The Spark side of the budget dimension: select_wave caps every host
+    at exactly the driver's bucket budget — an emitted budget, a robots
+    max_per_wave, or unknown_budget — for a grid slice at a 10 s period."""
+    cfg = CrawlConfig(wave_period_s=10.0)
+    rows, robots_rows, hosts = _grid(cfg, last_wave=2)
+    hosts = {h: v for h, v in hosts.items() if v[2] in (None, 0.5, 5, 150)}
+    robots = spark.createDataFrame(
+        [(h, False, [], None if d is None else float(d), m)
+         for h, (_st, m, d) in hosts.items() if "unknown" not in h],
+        ROBOTS_DDL,
+    )
+    hs = scheduler._HostState(
+        [r for r in rows if r["host"] in hosts],
+        robots_dim(robots, cfg.default_budget).collect(), cfg,
+    )
+    pending = spark.createDataFrame(
+        [(f"https://{h}/p/{i}", 0, h, f"/p/{i}", "x", 0, n * 40 + i, 1, "b", None,
+          None, i % 8)
+         for n, h in enumerate(sorted(hosts)) for i in range(30)],
+        schemas.PENDING,
+    )
+    got = {
+        r["host"]: r["n"]
+        for r in select_wave(
+            pending, robots, 3, 10_000, cfg.default_budget, 8,
+            budgets=hs.budget_df(spark, 3), unknown_budget=hs.bucket_of(None, 3)[1],
+        ).groupBy("host").agg(F.count("*").alias("n")).collect()
+    }
+    want = {h: min(30, hs.bucket_of(h, 3)[1]) for h in hosts}
+    assert {h: got.get(h, 0) for h in hosts} == want
+    assert len(set(want.values())) > 4, want  # the slice spans many budgets
 
 
 def test_empty_wave_fast_forward_jumps(spark, world, tmp_path_factory):

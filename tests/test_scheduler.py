@@ -156,11 +156,14 @@ def test_salt_width_invariance(spark, world):
 
     from visiblev8_crawler_spark import schemas
     from visiblev8_crawler_spark.operators.dedup import prepare_frontier
-    from visiblev8_crawler_spark.operators.waves import salt_col, select_wave
+    from visiblev8_crawler_spark.operators.waves import robots_dim, salt_col, select_wave
 
     frontier = spark.read.parquet(world["paths"]["frontier"])
     robots = spark.read.parquet(world["paths"]["robots"])
     prepared = prepare_frontier(frontier, robots).filter(F.col("reason").isNull())
+    # wave-0 bucket budgets, as the campaign's first wave computes them
+    hs = scheduler._HostState([], robots_dim(robots).collect(), CrawlConfig())
+    budgets = hs.budget_df(spark, 0)
     base = None
     for s in (1, 8, 32):
         pending = schemas.conform(
@@ -168,7 +171,10 @@ def test_salt_width_invariance(spark, world):
         )
         got = sorted(
             (r["canon_url"], r["order_in_wave"])
-            for r in select_wave(pending, robots, 0, BATCH, salt_width=s).collect()
+            for r in select_wave(
+                pending, robots, 0, BATCH, salt_width=s, budgets=budgets,
+                unknown_budget=hs.bucket_of(None, 0)[1],
+            ).collect()
         )
         if base is None:
             base = got

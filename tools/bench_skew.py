@@ -58,9 +58,11 @@ def main() -> None:
     from visiblev8_crawler_spark import schemas
     from visiblev8_crawler_spark.operators.waves import (
         choose_salt_width,
+        robots_dim,
         salt_col,
         select_wave,
     )
+    from visiblev8_crawler_spark.streaming.scheduler import CrawlConfig, _HostState
 
     # pending pool: hot-frac of rows on host "hot.example", the rest spread
     # evenly over cold hosts. Distributed generation (spark.range), not a
@@ -98,6 +100,12 @@ def main() -> None:
         schemas.ROBOTS,
     )
 
+    # wave-0 bucket budgets at a 1200 s period, computed on the driver as
+    # the scheduler does (empty here: every host's refill covers its cap)
+    hstate = _HostState([], robots_dim(robots).collect(), CrawlConfig(wave_period_s=1200.0))
+    budgets = hstate.budget_df(spark, 0)
+    unknown_budget = hstate.bucket_of(None, 0)[1]
+
     auto_width = None
 
     def timed(width: int) -> tuple[float, int]:
@@ -110,7 +118,7 @@ def main() -> None:
             t0 = time.perf_counter()
             n = select_wave(
                 p, robots, wave_id=0, batch_size=args.batch_size,
-                salt_width=width, wave_period_s=1200.0,
+                salt_width=width, budgets=budgets, unknown_budget=unknown_budget,
             ).count()
             ts.append(time.perf_counter() - t0)
         p.unpersist()
@@ -124,7 +132,8 @@ def main() -> None:
     pa = pending.withColumn("salt", salt_col(F.col("canon_url"), 1))
     pb = pending.withColumn("salt", salt_col(F.col("canon_url"), auto_width))
     sel = lambda p, w: select_wave(  # noqa: E731
-        p, robots, 0, args.batch_size, salt_width=w, wave_period_s=1200.0
+        p, robots, 0, args.batch_size, salt_width=w, budgets=budgets,
+        unknown_budget=unknown_budget,
     ).select("canon_url", "order_in_wave")
     mismatch = sel(pa, 1).exceptAll(sel(pb, auto_width)).count()
 
@@ -139,6 +148,7 @@ def main() -> None:
                 "salted_sec": t_salted,
                 "speedup": round(t_unsalted / t_salted, 2) if t_salted else None,
                 "selected_rows": n2,
+                "mismatch": mismatch,
                 "selection_identical": mismatch == 0 and n1 == n2,
                 "runs": args.runs,
             }

@@ -17,8 +17,7 @@ stack (see SURVEY.md §0) is re-expressed as Spark DataFrame plans:
                                      ``codecs``/``verify`` kernels)
 - staging-then-merge bulk loads   -> ``operators.merge`` (MERGE-when-not-matched)
 - ledger / checkpoint / resume    -> ``catalog`` (atomic manifest snapshots)
-- streaming analytics             -> ``streaming.windows`` (watermarked windows),
-                                     ``streaming.stateful`` (applyInPandasWithState)
+- streaming analytics             -> ``streaming.windows`` (watermarked windows)
 - Postgres analytics SQL + the training-data pipeline (dedup/ANN/text/
   multimodal/inference)            -> ``plans.*`` (DataFrame plans + SQL oracles)
 """

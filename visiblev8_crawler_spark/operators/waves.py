@@ -6,14 +6,21 @@ preference) with pure window algebra over the ``pending`` DataFrame.
 
 Selection spec (must match simulator.simulate_campaign exactly):
     order key   = (-priority, seq)
-    host cap    = the token-bucket budget for this wave (politeness_exprs:
-                  credit carried across waves + Crawl-delay refill rate +
-                  failure demotion; default_budget when host unknown)
+    host cap    = the token-bucket budget for this wave (``bucket``: credit
+                  carried across waves + Crawl-delay refill rate + failure
+                  demotion)
     wave        = first ``batch_size`` rows in order whose per-host rank in
                   order is <= the host's cap
 which is the window form of the simulator's sequential greedy scan (proof in
 simulator.py docstring; the cap is a per-host constant within a wave, so
 carried state does not disturb the equivalence).
+
+The politeness arithmetic is plain Python, evaluated once per host on the
+driver, which holds all per-host state (scheduler._HostState): ``bucket`` is
+the one formula, and the Spark plan only reads its results — a broadcast
+(host, host_budget) dimension of the hosts whose budget differs from the
+stateless value, falling back to robots' max_per_wave, then to the budget
+of a host nobody has described.
 
 Skew + shuffle design (north_rule "salted, host-hash-partitioned"):
 a hot host (Zipf head, urls_100k.txt analog) would put all its pending rows
@@ -37,6 +44,8 @@ window as fresh rows — one code path, same selection semantics.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -87,121 +96,65 @@ def choose_salt_width(pending: DataFrame) -> int:
     return max(1, min(256, -(-int(hottest) // ROWS_PER_SALT)))
 
 
-def politeness_exprs(
-    wave_id: int,
-    default_budget: int,
-    wave_period_s: float = DEFAULT_WAVE_PERIOD_S,
-    demote_after_failures: int = DEMOTE_AFTER_FAILURES,
-    demote_factor: int = DEMOTE_FACTOR,
-) -> dict[str, Column]:
-    """The token-bucket politeness formula as named Column expressions over
-    the joined (robots ⋈ host_state) columns ``max_per_wave``,
-    ``crawl_delay_s``, ``credit``, ``last_wave``, ``ok``, ``failed`` (the
-    state columns may be null for hosts never crawled — defaults 0/-1/0/0).
+def refill_rate(crawl_delay_s: float | None, wave_period_s: float) -> float:
+    """Bucket credits a host earns per wave: period / Crawl-delay, with the
+    reference DELAY for a host that declares none (or a non-positive one)."""
+    if not crawl_delay_s or crawl_delay_s <= 0:
+        crawl_delay_s = DEFAULT_CRAWL_DELAY_S
+    return wave_period_s / crawl_delay_s
 
-    This is THE authoritative politeness spec; simulator.simulate_campaign
-    replays the identical arithmetic sequentially, and the scheduler's
-    per-wave state update consumes ``eff_credit`` from the same expressions,
-    so selection and state can never drift apart. All arithmetic is IEEE
-    double with the same operation order on both sides.
+
+def bucket(
+    credit: float,
+    last_wave: int,
+    ok: int,
+    failed: int,
+    wave_id: int,
+    m: int,
+    crawl_delay_s: float | None,
+    wave_period_s: float = DEFAULT_WAVE_PERIOD_S,
+    demote_after: int = DEMOTE_AFTER_FAILURES,
+    demote_factor: int = DEMOTE_FACTOR,
+) -> tuple[float, int]:
+    """THE token-bucket politeness formula: one host's (eff_credit, budget)
+    at ``wave_id`` from its carried state (credit, last_wave, ok, failed —
+    0.0/-1/0/0 for a host never crawled) and its robots dims (``m`` =
+    max_per_wave, already defaulted; ``crawl_delay_s`` may be None).
 
         rate    = wave_period / crawl_delay          (credits earned / wave)
         m_eff   = demoted ? max(1, m // factor) : m  (abuse demotion)
         cap     = max(m_eff, 1)                      (bucket burst bound)
         eff     = min(credit + rate * (wave - last_wave), cap)
         budget  = min(m_eff, floor(eff))
-    """
-    delay = F.when(
-        F.col("crawl_delay_s").isNull() | (F.col("crawl_delay_s") <= 0),
-        F.lit(DEFAULT_CRAWL_DELAY_S),
-    ).otherwise(F.col("crawl_delay_s"))
-    rate = F.lit(float(wave_period_s)) / delay
-    m = F.coalesce(F.col("max_per_wave"), F.lit(default_budget))
-    ok = F.coalesce(F.col("ok"), F.lit(0))
-    failed = F.coalesce(F.col("failed"), F.lit(0))
-    demoted = (failed >= F.lit(demote_after_failures)) & (failed > ok)
-    m_eff = F.when(
-        demoted, F.greatest(F.lit(1), F.floor(m / F.lit(demote_factor)).cast("int"))
-    ).otherwise(m)
-    cap = F.greatest(m_eff, F.lit(1)).cast("double")
-    eff = F.least(
-        F.coalesce(F.col("credit"), F.lit(0.0))
-        + rate * (F.lit(wave_id) - F.coalesce(F.col("last_wave"), F.lit(-1))),
-        cap,
-    )
-    return {
-        "rate": rate,
-        "m_eff": m_eff,
-        "eff_credit": eff,
-        "host_budget": F.least(m_eff, F.floor(eff).cast("int")),
-    }
+
+    After a wave that selected n rows of the host, its credit is eff - n.
+    The driver (scheduler._HostState), the resume fold
+    (scheduler.host_state_df) and thus every selection budget derive from
+    this one function; simulator.simulate_campaign replays the same IEEE-
+    double arithmetic independently as the reference."""
+    rate = refill_rate(crawl_delay_s, wave_period_s)
+    demoted = failed >= demote_after and failed > ok
+    m_eff = max(1, m // demote_factor) if demoted else m
+    eff = min(credit + rate * (wave_id - last_wave), float(max(m_eff, 1)))
+    return eff, min(m_eff, math.floor(eff))
 
 
-STATE_COLS = [
-    ("credit", "double"), ("last_wave", "int"), ("ok", "long"), ("failed", "long"),
-]
-
-
-def robots_dim(robots: DataFrame) -> DataFrame:
-    """The politeness columns of the robots dimension (crawl_delay_s may be
-    absent in minimal fixtures — filled with null = reference DELAY)."""
-    return robots.select("host", "max_per_wave", *(
-        [F.col("crawl_delay_s")] if "crawl_delay_s" in robots.columns
-        else [F.lit(None).cast("double").alias("crawl_delay_s")]
-    ))
-
-
-def join_politeness_dims(
-    df: DataFrame,
-    robots: DataFrame,
-    host_state: DataFrame | None,
-) -> DataFrame:
-    """LEFT-broadcast-join the robots and host-state dimensions onto ``df``
-    (host-keyed), producing exactly the columns politeness_exprs reads.
-    Two independent broadcast hash joins — never a robots ⋈ state pre-join,
-    which (being full-outer) cannot broadcast and would drag a SortMergeJoin
-    + two exchanges into every wave. Both dimensions are per-host and the
-    state is driver-held (scheduler._HostState), so the driver's host-count
-    ceiling bounds what these broadcasts carry."""
-    out = df.join(F.broadcast(robots_dim(robots)), "host", "left")
-    if host_state is None:
-        for name, t in STATE_COLS:
-            out = out.withColumn(name, F.lit(None).cast(t))
-        return out
-    state = host_state.select("host", *[n for n, _ in STATE_COLS])
-    return out.join(F.broadcast(state), "host", "left")
-
-
-def with_host_budget(
-    pending: DataFrame,
-    robots: DataFrame,
-    default_budget: int,
-    wave_period_s: float = DEFAULT_WAVE_PERIOD_S,
-    host_state: DataFrame | None = None,
-    wave_id: int = 0,
-    demote_after_failures: int = DEMOTE_AFTER_FAILURES,
-    demote_factor: int = DEMOTE_FACTOR,
-) -> DataFrame:
-    """Left-broadcast-join the per-host politeness dimensions (robots and
-    the carried token-bucket state, one row per host each) onto pending and
-    evaluate the token-bucket budget at ``wave_id``.
-    Unknown hosts get the default budget at the reference's global
-    DELAY=1 s; hosts with no state yet start with an empty bucket that has
-    accrued ``wave_id + 1`` waves of credit."""
-    e = politeness_exprs(
-        wave_id, default_budget, wave_period_s, demote_after_failures, demote_factor
-    )
-    return (
-        join_politeness_dims(pending, robots, host_state)
-        .withColumn("host_budget", e["host_budget"])
-        .drop("max_per_wave", "crawl_delay_s", "credit", "last_wave", "ok", "failed")
+def robots_dim(robots: DataFrame, default_budget: int = DEFAULT_BUDGET) -> DataFrame:
+    """The politeness columns of the robots dimension, ``max_per_wave``
+    defaulted to ``default_budget`` (crawl_delay_s may be absent in minimal
+    fixtures — filled with null = reference DELAY)."""
+    return robots.select(
+        "host",
+        F.coalesce(F.col("max_per_wave"), F.lit(default_budget)).alias("max_per_wave"),
+        F.col("crawl_delay_s") if "crawl_delay_s" in robots.columns
+        else F.lit(None).cast("double").alias("crawl_delay_s"),
     )
 
 
 def next_eligible_wave(
     pending: DataFrame,
-    robots: DataFrame,
-    host_state: DataFrame | None,
+    state: dict,
+    dims: dict,
     default_budget: int = DEFAULT_BUDGET,
     wave_period_s: float = DEFAULT_WAVE_PERIOD_S,
 ) -> int | None:
@@ -214,25 +167,22 @@ def next_eligible_wave(
     and the scheduler jumps straight there instead of burning one selection
     pass per empty wave (a host declaring Crawl-delay: 3600 at a 60 s
     period would otherwise cost 60 empty selection jobs per fetch).
+    ``state`` / ``dims`` are the driver-held per-host maps of
+    scheduler._HostState; only the distinct pending hosts come from Spark.
     Hosts whose concurrency cap is 0 (a robots row with max_per_wave=0)
     can never fetch at any wave, so they are excluded from the minimum —
     otherwise the scheduler would fast-forward one jump at a time until
     max_waves. Returns None when pending has no rows or no pending host can
     ever become eligible (the scheduler then stops instead of spinning)."""
-    hosts = join_politeness_dims(
-        pending.select("host").distinct(), robots, host_state
-    ).filter(F.coalesce(F.col("max_per_wave"), F.lit(default_budget)) >= 1)
-    delay = F.when(
-        F.col("crawl_delay_s").isNull() | (F.col("crawl_delay_s") <= 0),
-        F.lit(DEFAULT_CRAWL_DELAY_S),
-    ).otherwise(F.col("crawl_delay_s"))
-    rate = F.lit(float(wave_period_s)) / delay
-    credit = F.coalesce(F.col("credit"), F.lit(0.0))
-    last = F.coalesce(F.col("last_wave"), F.lit(-1))
-    nxt = hosts.agg(
-        F.min(last + F.ceil((F.lit(1.0) - credit) / rate)).alias("w")
-    ).collect()[0]["w"]
-    return int(nxt) if nxt is not None else None
+    waits = []
+    for r in pending.select("host").distinct().collect():
+        m, d = dims.get(r["host"], (default_budget, None))
+        if m >= 1:
+            credit, last = state.get(r["host"], (0.0, -1))[:2]
+            waits.append(
+                last + math.ceil((1.0 - credit) / refill_rate(d, wave_period_s))
+            )
+    return min(waits, default=None)
 
 
 def select_wave(
@@ -242,20 +192,37 @@ def select_wave(
     batch_size: int,
     default_budget: int = DEFAULT_BUDGET,
     salt_width: int = 8,
-    wave_period_s: float = DEFAULT_WAVE_PERIOD_S,
-    host_state: DataFrame | None = None,
-    demote_after_failures: int = DEMOTE_AFTER_FAILURES,
-    demote_factor: int = DEMOTE_FACTOR,
+    budgets: DataFrame | None = None,
+    unknown_budget: int | None = None,
 ) -> DataFrame:
     """Pick this wave's rows from pending (which already includes any
     retries — the scheduler unions them in). Returns pending columns +
-    (wave_id, order_in_wave). Deterministic and plan-independent."""
+    (wave_id, order_in_wave). Deterministic and plan-independent.
+
+    Each host's cap is ``coalesce(host_budget, max_per_wave,
+    unknown_budget)``: ``budgets`` is the driver-computed (host,
+    host_budget) dimension of every host whose bucket budget differs from
+    its stateless value (scheduler._HostState.budget_df), robots supplies
+    the defaulted max_per_wave, and ``unknown_budget`` (default:
+    ``default_budget``) is the bucket budget of a host in neither. Both
+    dimensions are per-host and LEFT-broadcast-joined — two independent
+    broadcast hash joins, never a pre-join of the two (full-outer, which
+    cannot broadcast and would drag a SortMergeJoin + two exchanges into
+    every wave)."""
     order = [F.col("priority").desc(), F.col("seq").asc()]
 
-    cand = with_host_budget(
-        pending, robots, default_budget, wave_period_s,
-        host_state, wave_id, demote_after_failures, demote_factor,
+    cand = pending.join(
+        F.broadcast(robots_dim(robots, default_budget).select("host", "max_per_wave")),
+        "host", "left",
     )
+    caps = [F.col("max_per_wave")]
+    if budgets is not None:
+        cand = cand.join(F.broadcast(budgets), "host", "left")
+        caps.insert(0, F.col("host_budget"))
+    fallback = default_budget if unknown_budget is None else unknown_budget
+    cand = cand.withColumn(
+        "host_budget", F.coalesce(*caps, F.lit(fallback))
+    ).drop("max_per_wave")
     if salt_width > 1:
         # phase 1: bound each host to <= salt_width*cap survivors. One hash
         # exchange on (host, salt) — the salt splits a hot host across

@@ -675,7 +675,8 @@ def embedding_lsh_neardup_pairs_incremental(spark, sf_dir):
     # map-only corpus scan: zero joins, zero pair-level exchanges, the
     # only exchange in the plan is the conditional fanout round-robin.
     # Signature parity: the in-kernel sig is the same exact `v[axis] > 0`
-    # comparison _sig_expr_spark evaluates (no float arithmetic), and
+    # comparison _sig_expr_spark evaluates, NaN included (no float
+    # arithmetic), and
     # cosines use the same sequential fold — bit-identical output, pinned
     # by the oracle replica + full-recompute equivalence + planted-delta
     # gates.
@@ -700,12 +701,13 @@ def embedding_lsh_neardup_pairs_incremental(spark, sf_dir):
     else:
         D = np.zeros((0, _DIM), dtype=np.float64)
     # delta bucket index: (band, sig) -> delta row positions, sig bits by
-    # the exact _sig_expr_spark sign rule
+    # the exact _sig_expr_spark sign rule — Spark orders NaN above every
+    # value, so its `v > 0` holds for NaN; ~(x <= 0) is the numpy twin
     dbuckets: dict = {}
     for b_i, ax in enumerate(axes):
         sigs = np.zeros(len(d_ids), dtype=np.int64)
         for j, a_ in enumerate(ax):
-            sigs += np.where(D[:, a_ - 1] > 0, 2 ** j, 0)
+            sigs += np.where(~(D[:, a_ - 1] <= 0), 2 ** j, 0)
         for s_val in np.unique(sigs):
             dbuckets[(b_i, int(s_val))] = np.flatnonzero(sigs == s_val)
     bdelta = spark.sparkContext.broadcast(
@@ -728,7 +730,7 @@ def embedding_lsh_neardup_pairs_incremental(spark, sf_dir):
             bsigs = np.zeros((bands, nrows), dtype=np.int64)
             for b_i, ax in enumerate(axes):
                 for j, a_ in enumerate(ax):
-                    bsigs[b_i] += np.where(A[:, a_ - 1] > 0, 2 ** j, 0)
+                    bsigs[b_i] += np.where(~(A[:, a_ - 1] <= 0), 2 ** j, 0)
             # per-row candidate set: union of the row's delta buckets
             # (np.unique subsumes the old cross-band collect_set); for
             # delta rows only strictly-newer partners (vec_b = max side)

@@ -141,7 +141,7 @@ FETCHES = StructType(
 # fold of the fetches ledger per host (scheduler.host_state_df), maintained
 # as DERIVED state in driver memory (scheduler._HostState, never committed).
 # credit/last_wave carry unused budget across waves; ok/failed drive the
-# failure-rate demotion (waves.politeness_exprs).
+# failure-rate demotion (both read by waves.bucket, on the driver).
 HOST_STATE = StructType(
     [
         StructField("host", StringType()),

@@ -24,7 +24,7 @@ Semantics replayed, with reference citations:
 Wave selection rule (the authoritative spec for both this simulator and the
 Spark plan): candidates = unseen ∪ retries, ordered by (-priority, seq);
 greedy scan selects a row unless its host already hit this wave's bucket
-budget (waves.politeness_exprs formula); stop at batch_size.
+budget (the waves.bucket formula); stop at batch_size.
 Greedy-with-host-skip is exactly equivalent to "per-host rank <= budget,
 then global top-batch_size by order", which is how the Spark side computes
 it with window functions (operators/waves.py) — the budget is a per-host
@@ -111,9 +111,9 @@ def simulate_campaign(
         pending.append(item)
 
     # 2. wave loop — politeness is a per-host token bucket carried across
-    # waves (the exact Python mirror of waves.politeness_exprs; identical
-    # IEEE-double arithmetic in the same order so the Spark scheduler can
-    # never drift from this reference):
+    # waves, replayed here independently of waves.bucket (which computes
+    # every budget the Spark scheduler uses) as the reference it is tested
+    # against — identical IEEE-double arithmetic in the same order:
     #     rate   = period / delay            (credits earned per wave)
     #     m_eff  = demoted ? max(1, m // f) : m
     #     eff    = min(credit + rate * (w - last_wave), max(m_eff, 1))
@@ -165,8 +165,8 @@ def simulate_campaign(
                 leftover.append(item)
         if not selected:
             # every pending host's bucket is below 1 credit: fast-forward to
-            # the earliest wave where some host reaches 1 (waves.
-            # next_eligible_wave mirror) instead of spinning empty waves;
+            # the earliest wave where some host reaches 1 (the same rule as
+            # waves.next_eligible_wave) instead of spinning empty waves;
             # zero-cap hosts (max_per_wave=0) can never fetch and are
             # excluded — if none remain, the campaign is done
             eligible = {

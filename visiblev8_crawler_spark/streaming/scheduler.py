@@ -46,6 +46,7 @@ import threading
 import time
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,11 +55,12 @@ from ..catalog import ParquetCatalog
 from ..operators.dedup import prepare_frontier
 from ..operators.fetch import fetch_verify
 from ..operators.waves import (
-    DEFAULT_CRAWL_DELAY_S,
     DEMOTE_AFTER_FAILURES,
     DEMOTE_FACTOR,
+    bucket,
     choose_salt_width,
     next_eligible_wave,
+    refill_rate,
     robots_dim,
     salt_col,
     select_wave,
@@ -137,13 +139,12 @@ def pending_df(cat: ParquetCatalog, salt_width: int = 8) -> DataFrame:
     return schemas.conform(fresh.unionByName(retries), schemas.PENDING)
 
 
+# (credit, last_wave, ok, failed) of a host never crawled
+_FRESH = (0.0, -1, 0, 0)
+
+
 def host_state_df(
-    cat: ParquetCatalog,
-    robots: DataFrame,
-    default_budget: int = 25,
-    wave_period_s: float = 60.0,
-    demote_after_failures: int = DEMOTE_AFTER_FAILURES,
-    demote_factor: int = DEMOTE_FACTOR,
+    cat: ParquetCatalog, robots: DataFrame, cfg: "CrawlConfig | None" = None
 ) -> DataFrame:
     """Re-derive the per-host politeness token bucket + abuse record from the
     committed fetch ledger (the resume path; same design rule as pending_df:
@@ -151,13 +152,12 @@ def host_state_df(
     state table to write, compact, or reconcile). run_campaign collects the
     result into the driver-held _HostState.
 
-    The bucket recurrence (waves.politeness_exprs) is a sequential fold per
-    host over its (wave_id, n_selected, n_ok) history, so the replay is a
-    grouped applyInPandas: one shuffle by host at resume time, with the
-    identical IEEE-double arithmetic the in-run incremental update performs —
-    the kill-resume equality test is what proves the two never diverge."""
-    import pandas as pd
-
+    The bucket recurrence (waves.bucket) is a sequential fold per host over
+    its (wave_id, n_selected, n_ok) history, so the replay is a grouped
+    applyInPandas — one shuffle by host at resume time, distributed because
+    its input grows with waves x hosts — that ships waves.bucket itself to
+    the workers: the in-run update applies the same function, and the
+    kill-resume equality tests prove the two never diverge."""
     per_wave = (
         cat.read("fetches")
         .groupBy("host", "wave_id")
@@ -166,44 +166,27 @@ def host_state_df(
             F.sum(F.when(F.col("status") == "OK", 1).otherwise(0)).alias("n_ok"),
         )
     )
-    dims = robots.select(
-        "host",
-        "max_per_wave",
-        *(
-            [F.col("crawl_delay_s")]
-            if "crawl_delay_s" in robots.columns
-            else [F.lit(None).cast("double").alias("crawl_delay_s")]
-        ),
-    )
-    joined = per_wave.join(F.broadcast(dims), "host", "left")
-    wp, db = float(wave_period_s), int(default_budget)
-    da, dfac = int(demote_after_failures), int(demote_factor)
+    cfg = cfg or CrawlConfig()
+    db = cfg.default_budget
+    knobs = (cfg.wave_period_s, cfg.demote_after_failures, cfg.demote_factor)
+    joined = per_wave.join(F.broadcast(robots_dim(robots, db)), "host", "left")
 
-    def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("wave_id")
         m_raw = pdf["max_per_wave"].iloc[0]
         m = db if pd.isna(m_raw) else int(m_raw)
         d_raw = pdf["crawl_delay_s"].iloc[0]
-        d = DEFAULT_CRAWL_DELAY_S if (pd.isna(d_raw) or d_raw <= 0) else float(d_raw)
-        rate = wp / d
-        credit, last, ok, failed = 0.0, -1, 0, 0
+        d = None if pd.isna(d_raw) else float(d_raw)
+        credit, last, ok, failed = _FRESH
         for w, n_sel, n_ok in zip(pdf["wave_id"], pdf["n_sel"], pdf["n_ok"]):
-            m_eff = max(1, m // dfac) if (failed >= da and failed > ok) else m
-            eff = min(credit + rate * (int(w) - last), float(max(m_eff, 1)))
+            eff, _ = bucket(credit, last, ok, failed, int(w), m, d, *knobs)
             credit = eff - int(n_sel)
             last = int(w)
             ok += int(n_ok)
             failed += int(n_sel) - int(n_ok)
         return pd.DataFrame(
-            [
-                {
-                    "host": pdf["host"].iloc[0],
-                    "credit": credit,
-                    "last_wave": last,
-                    "ok": ok,
-                    "failed": failed,
-                }
-            ]
+            [(pdf["host"].iloc[0], credit, last, ok, failed)],
+            columns=schemas.HOST_STATE.fieldNames(),
         )
 
     return joined.groupBy("host").applyInPandas(fold, schema=schemas.HOST_STATE)
@@ -214,73 +197,83 @@ class _HostState:
 
     Driver-held, like the bloom shards (the north_rule's own "broadcast
     bloom" pattern): per-host aggregate state is orders of magnitude
-    smaller than the frontier, and the selection plan consumes it as a
-    broadcast dimension — holding the authoritative copy on the driver
-    removes one checkpoint action + one aggregation job per wave (measured
-    0.4 s/wave at local[8], the entire politeness overhead). The driver
-    therefore sets the campaign's host-count ceiling: this object plus the
-    robots dims retains ~500 B/host (~1.25 KB/host at peak while the resume
+    smaller than the frontier, so the driver evaluates every host's bucket
+    (waves.bucket) itself and the selection plan only reads the resulting
+    budgets as a broadcast dimension — no politeness arithmetic in Spark,
+    no checkpoint action or aggregation job per wave. The driver therefore
+    sets the campaign's host-count ceiling: this object plus the robots
+    dims retains ~500 B/host (~1.25 KB/host at peak while the resume
     fold's rows are collected; CPython 3.11, ~25-char host names,
     tracemalloc at 10^4-10^6 hosts), i.e. ~0.5 GB of driver memory per
-    million hosts. The update arithmetic below is the exact Python mirror
-    of waves.politeness_exprs / simulator.simulate_campaign, so they stay
-    in IEEE-double lockstep. Resume re-derives the dict by folding the
-    fetch ledger (host_state_df) — state is a projection of fetches, never
-    a committed table."""
+    million hosts. Resume re-derives the dict by folding the fetch ledger
+    (host_state_df) — state is a projection of fetches, never a committed
+    table."""
 
     def __init__(self, rows, robots_rows, cfg: "CrawlConfig"):
         self.state = {
             r["host"]: [r["credit"], r["last_wave"], r["ok"], r["failed"]]
             for r in rows
         }
-        # robots_rows come from robots_dim(), which always carries both cols
+        # robots_rows come from robots_dim(): max_per_wave already defaulted
         self.dims = {
             r["host"]: (r["max_per_wave"], r["crawl_delay_s"]) for r in robots_rows
         }
         self.cfg = cfg
+        # the hosts whose budget can differ from select_wave's stateless
+        # fallback (see budgets), kept current by update and budgets
+        self._relevant = {
+            h for h in self.state.keys() | self.dims.keys()
+            if self._depends(h, self.state.get(h, _FRESH))
+        }
 
-    def as_df(self, spark: SparkSession) -> DataFrame | None:
-        """The selection-side dimension frame: a LocalRelation built via
-        Arrow — scanned inside the select job, no extra Spark action.
+    def _rate_cap(self, host: str) -> tuple[float, float]:
+        m, d = self.dims.get(host, (self.cfg.default_budget, None))
+        return refill_rate(d, self.cfg.wave_period_s), float(max(m, 1))
 
-        Only hosts whose budget actually DEPENDS on carried state ride
-        along — an exact filter, not an approximation: for a host with
-        refill rate >= bucket cap (delay small relative to the wave
-        period, the common case) and no demotion, eff = min(credit +
-        rate*delta, cap) = cap for every delta >= 1 and any credit >= 0,
-        so its budget equals the stateless default and the politeness
-        expressions compute the identical value from the null-state
-        branch. Campaigns with no delay-bound or demoted hosts (e.g. the
-        throughput bench at wave_period=1200) therefore skip the state
-        broadcast entirely (measured ~10% of wave wall at 5000 hosts)."""
-        rows = [
-            (h, v[0], v[1], v[2], v[3])
-            for h, v in self.state.items()
-            if self._state_relevant(h, v)
-        ]
-        if not rows:
-            return None
-        import pandas as pd
-
-        pdf = pd.DataFrame(
-            rows, columns=["host", "credit", "last_wave", "ok", "failed"]
-        )
-        return spark.createDataFrame(pdf, schema=schemas.HOST_STATE)
-
-    def _state_relevant(self, host: str, v) -> bool:
+    def _depends(self, host: str, v) -> bool:
+        """Demoted (budget differs from the robots default) or delay-bound
+        (credit carries)."""
         _credit, _last, ok, failed = v
-        if failed >= self.cfg.demote_after_failures and failed > ok:
-            return True  # demoted: budget differs from the robots default
-        rate, m = self._rate_m(host)
-        return rate < float(max(m, 1))  # delay-bound: credit carries
+        rate, cap = self._rate_cap(host)
+        return (failed >= self.cfg.demote_after_failures and failed > ok) or rate < cap
 
-    def _rate_m(self, host: str) -> tuple[float, int]:
-        m, d = self.dims.get(host, (None, None))
-        if m is None:
-            m = self.cfg.default_budget
-        if not d or d <= 0:
-            d = DEFAULT_CRAWL_DELAY_S
-        return self.cfg.wave_period_s / d, m
+    def bucket_of(self, host: str | None, wave_id: int) -> tuple[float, int]:
+        """(eff_credit, budget) of ``host`` at ``wave_id``; ``None`` (or any
+        host with neither state nor robots row) is a never-seen host."""
+        c = self.cfg
+        return bucket(
+            *self.state.get(host, _FRESH), wave_id,
+            *self.dims.get(host, (c.default_budget, None)),
+            c.wave_period_s, c.demote_after_failures, c.demote_factor,
+        )
+
+    def budgets(self, wave_id: int) -> dict[str, int]:
+        """{host: budget} at ``wave_id`` for exactly the hosts whose budget
+        can differ from the stateless fallback select_wave applies (robots
+        max_per_wave, else ``bucket_of(None, wave_id)``). Every other host
+        has rate >= cap, or has no state and rate * (wave_id + 1) >= cap,
+        so eff = min(credit + rate*delta, cap) = cap (credit >= 0, delta >=
+        1) and its budget is the fallback: an exact filter, and the work is
+        proportional to the hosts it keeps (campaigns where none is
+        delay-bound or demoted, e.g. the throughput bench at
+        wave_period=1200, emit nothing and skip the broadcast — measured
+        ~10% of wave wall at 5000 hosts). Wave ids only grow within a run,
+        so a fresh bucket found full is dropped for good."""
+        for h in list(self._relevant):
+            rate, cap = self._rate_cap(h)
+            if h not in self.state and rate * (wave_id + 1) >= cap:
+                self._relevant.discard(h)
+        return {h: self.bucket_of(h, wave_id)[1] for h in self._relevant}
+
+    def budget_df(self, spark: SparkSession, wave_id: int) -> DataFrame | None:
+        """budgets() as the selection plan's (host, host_budget) dimension:
+        a LocalRelation built via Arrow — scanned inside the select job, no
+        extra Spark action. None when no host needs one."""
+        b = self.budgets(wave_id)
+        if not b:
+            return None
+        pdf = pd.DataFrame({"host": list(b), "host_budget": list(b.values())})
+        return spark.createDataFrame(pdf, schema="host string, host_budget int")
 
     def update(self, wave_id: int, host_stats) -> None:
         """Fold one wave's per-host (n_sel, n_ok) aggregate rows — produced
@@ -291,17 +284,13 @@ class _HostState:
         hides entirely behind the ~1 s checkpoint)."""
         for r in host_stats:
             host, n_sel, n_ok = r["host"], int(r["n_sel"]), int(r["n_ok"])
-            credit, last, ok, failed = self.state.get(host, (0.0, -1, 0, 0))
-            rate, m = self._rate_m(host)
-            m_eff = (
-                max(1, m // self.cfg.demote_factor)
-                if (failed >= self.cfg.demote_after_failures and failed > ok)
-                else m
-            )
-            eff = min(credit + rate * (wave_id - last), float(max(m_eff, 1)))
-            self.state[host] = [
-                eff - n_sel, wave_id, ok + n_ok, failed + (n_sel - n_ok)
-            ]
+            eff, _ = self.bucket_of(host, wave_id)
+            _credit, _last, ok, failed = self.state.get(host, _FRESH)
+            v = self.state[host] = [eff - n_sel, wave_id, ok + n_ok, failed + n_sel - n_ok]
+            if self._depends(host, v):
+                self._relevant.add(host)
+            else:
+                self._relevant.discard(host)
 
 
 @dataclass
@@ -310,7 +299,7 @@ class CrawlConfig:
     default_budget: int = 25
     # one wave models this many seconds of wall clock for politeness: a host
     # with robots Crawl-delay d earns period/d bucket credits per wave,
-    # carried across waves (waves.politeness_exprs; reference DELAY,
+    # carried across waves (waves.bucket; reference DELAY,
     # url_sender.py:45) — so d > period means one fetch every
     # ceil(d/period) waves, never starvation
     wave_period_s: float = 60.0
@@ -425,7 +414,6 @@ def run_campaign(
     # and storage-partitioned reads make that exchange disappear. Retries
     # (tiny, bounded by one wave's failures) are unioned into this pending
     # frame at commit time (_wave_loop) and ride the same selection path.
-    P = spark.sparkContext.defaultParallelism
     _warm_python_workers(spark)
     salt_width = (
         cfg.salt_width if cfg.salt_width is not None else choose_salt_width(pool_df(cat))
@@ -436,11 +424,8 @@ def run_campaign(
     # computed, and its per-host aggregate comes to the driver (bloom-shard
     # pattern; see _HostState)
     hstate = _HostState(
-        host_state_df(
-            cat, robots, cfg.default_budget, cfg.wave_period_s,
-            cfg.demote_after_failures, cfg.demote_factor,
-        ).collect(),
-        robots_dim(robots).collect(),
+        host_state_df(cat, robots, cfg).collect(),
+        robots_dim(robots, cfg.default_budget).collect(),
         cfg,
     )
 
@@ -469,17 +454,14 @@ def _wave_loop(
         if stop_after_waves is not None and waves_done >= stop_after_waves:
             break
         t0 = time.perf_counter()
-        state_df = hstate.as_df(spark)
         # select_wave necessarily funnels through one partition to assign
         # order_in_wave (bounded <= batch_size rows); re-spread the wave so
         # the fetch UDF uses every core instead of one.
         selected = (
             select_wave(
                 pending, robots, wave_id, cfg.batch_size, cfg.default_budget,
-                salt_width, wave_period_s=cfg.wave_period_s,
-                host_state=state_df,
-                demote_after_failures=cfg.demote_after_failures,
-                demote_factor=cfg.demote_factor,
+                salt_width, budgets=hstate.budget_df(spark, wave_id),
+                unknown_budget=hstate.bucket_of(None, wave_id)[1],
             )
             .repartition(P, "canon_url")
             .persist()
@@ -506,7 +488,8 @@ def _wave_loop(
             if pending.isEmpty():
                 break
             nxt = next_eligible_wave(
-                pending, robots, state_df, cfg.default_budget, cfg.wave_period_s
+                pending, hstate.state, hstate.dims, cfg.default_budget,
+                cfg.wave_period_s,
             )
             if nxt is None:  # no pending host can ever fetch (cap 0)
                 break
