@@ -359,6 +359,32 @@ def test_embedding_neardup_incremental_nan_band_axis(spark):
     assert pairs(embedding_lsh_neardup_pairs_incremental(spark, d)) == want
 
 
+def test_lsh_query_bucket_nan_axis(spark, tmp_path):
+    """The query's bucket follows Spark's sign rule, like the corpus side:
+    with NaN at axes 1, 8 and 22 the query (vec_id 0) lands in bucket 7
+    (Spark's `NaN > 0` is true), so its exact copy (vec_id 1) must come back
+    from the single-probe and the multiprobe query. Python's `NaN > 0` would
+    probe bucket 0 (and its Hamming-1 neighbours), which misses it."""
+    from visiblev8_crawler_spark.plans.annops import (
+        _DIM,
+        embedding_lsh_multiprobe_topk,
+        embedding_lsh_topk,
+    )
+
+    query = [1.0] * _DIM
+    for ax in (0, 7, 21):
+        query[ax] = float("nan")
+    rows = [(0, query, 0), (1, list(query), 1)]
+    rows += [(i, [-1.0] * _DIM, 2) for i in range(2, 6)]  # bucket 0 decoys
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label long"
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    for fn in (embedding_lsh_topk, embedding_lsh_multiprobe_topk):
+        got = {r["vec_id"] for r in fn(spark, str(tmp_path)).collect()}
+        assert got == {1}, (fn.__name__, got)
+
+
 def test_knn_join_oracle_replica(spark):
     """embedding_knn_join parity: the DuckDB replica is the SAME LSH plan
     (generated from the same axis table, sequential-fold cosines), so the

@@ -1,16 +1,22 @@
 """Broadcast Bloom URL-seen filter (operators/bloom.py) — the north-rule
-"bloom/cuckoo URL-seen" component.
+"bloom/cuckoo URL-seen" component — and the seed ingest it screens.
 
 Invariants under test:
 - no false negatives, ever (the property that makes the pre-filter exact);
 - bounded false-positive rate near the configured fpp;
-- ``seen_anti_join`` ≡ plain exact ``left_anti`` for overlapping inputs;
+- the persisted bloom state is one row (``shard`` 0), and anything else is
+  refused;
+- the exact confirm of bloom-positive rows streams the pool past a
+  broadcast of the batch keys (no shuffle of the pool) and gives the same
+  reasons as a plain left join;
 - ``scheduler.add_seeds`` end-to-end: cache hits rejected as 'cached'
   (backend tasks.py:148-156 D1), already-enqueued as 'enqueued', fresh URLs
-  crawled exactly once after resume.
+  crawled exactly once after resume; later ingests OR in a delta instead of
+  rebuilding; concurrent ingests lose no delta.
 """
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from visiblev8_crawler_spark.operators import bloom as B
@@ -44,27 +50,63 @@ def test_bloom_spark_build_probe(spark):
     assert sum(fp) / len(fp) < 0.05, f"fp rate {sum(fp)/len(fp)} too high for fpp=0.01"
 
 
-def test_sharded_bloom_equivalent(spark):
-    """Sharding is purely operational: no false negatives, and the
-    bloom-prefiltered anti-join result is identical to the single-bitmap and
-    plain-exact paths."""
-    members = [f"https://s{i % 31}.example/p/{i}" for i in range(4000)]
-    others = [f"https://s{i % 31}.example/p/{i}" for i in range(4000, 8000)]
-    sharded = B.build_bloom(_urls_df(spark, members), fpp=0.01, shards=4)
-    assert isinstance(sharded, B.ShardedBloom) and len(sharded.shards) == 4
+def test_bloom_state_is_one_row():
+    from visiblev8_crawler_spark.schemas import BLOOM_STATE
 
-    got = B.with_bloom_maybe(_urls_df(spark, members), sharded).collect()
-    assert all(r["maybe_seen"] for r in got), "sharded bloom false negative"
-    fp = [r["maybe_seen"] for r in B.with_bloom_maybe(_urls_df(spark, others), sharded).collect()]
-    assert sum(fp) / len(fp) < 0.05
+    m, k = B.BloomFilter.params_for(100)
+    bf = B.BloomFilter(m, k, np.arange(m // 8, dtype=np.uint8))
+    rows = [dict(zip(BLOOM_STATE.fieldNames(), t)) for t in B.bloom_to_rows(bf, 200, 100)]
+    assert [r["shard"] for r in rows] == [0]
+    back, capacity, n_added = B.bloom_from_rows(rows)
+    assert (back.n_bits, back.n_hashes, capacity, n_added) == (m, k, 200, 100)
+    assert (back.bits == bf.bits).all()
+    for bad in ([], rows + [dict(rows[0], shard=1)]):
+        with pytest.raises(ValueError):
+            B.bloom_from_rows(bad)
 
-    cand = _urls_df(spark, members[:2000] + others[:2000])
-    seen = _urls_df(spark, members)
-    via_shards = {
-        r["canon_url"] for r in B.seen_anti_join(cand, seen, bloom=sharded).collect()
-    }
-    exact = {r["canon_url"] for r in cand.join(seen, "canon_url", "left_anti").collect()}
-    assert via_shards == exact == set(others[:2000])
+
+def test_confirm_suspects_streams_pool_past_broadcast_keys(spark):
+    """With auto-broadcast off (a pool past broadcast range), the confirm of
+    bloom-positive rows must plan no SortMergeJoin and no hash exchange —
+    the pool is streamed, never shuffled — and give the same reasons as the
+    plain two-left-join shape, which does plan a SortMergeJoin here."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        url = F.concat(F.lit("u://p/"), F.col("id").cast("string")).alias("canon_url")
+        pool = spark.range(20_000).select(url)
+        seen = spark.range(0, 20_000, 3).select(url)
+        # crawled, pooled-only and false-positive suspects
+        ids = list(range(0, 60)) + list(range(30_000, 30_020))
+        suspect = spark.createDataFrame(
+            [(f"u://p/{i}", i) for i in ids], "canon_url string, seq long"
+        )
+
+        got = scheduler._confirm_suspects(suspect, pool, seen)
+        got_rows = {(r["canon_url"], r["seq"], r["reason"]) for r in got.collect()}
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" not in plan, plan
+        assert "Exchange hashpartitioning" not in plan, plan
+
+        ref = (
+            suspect.join(pool.withColumn("_pool", F.lit(True)), "canon_url", "left")
+            .join(seen.withColumn("_seen", F.lit(True)), "canon_url", "left")
+            .withColumn(
+                "reason",
+                F.when(F.col("_seen"), "cached").when(F.col("_pool"), "enqueued"),
+            )
+        )
+        want_rows = {(r["canon_url"], r["seq"], r["reason"]) for r in ref.collect()}
+        assert "SortMergeJoin" in ref._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    assert got_rows == want_rows
+    assert len(got_rows) == len(ids)
+    reasons = [r for _, _, r in got_rows]
+    assert (reasons.count("cached"), reasons.count("enqueued"), reasons.count(None)) == (
+        20, 40, 20
+    )
 
 
 def test_catalog_compaction(spark, tmp_path_factory):
@@ -81,15 +123,6 @@ def test_catalog_compaction(spark, tmp_path_factory):
     assert cat.file_sets("t") == 1
     assert {r["v"] for r in cat.read("t").collect()} == {0, 1, 2}
     assert cat.compact("t") is False  # already compact
-
-
-def test_seen_anti_join_equals_exact(spark):
-    cand = _urls_df(spark, [f"u://c/{i}" for i in range(2000)])
-    seen = _urls_df(spark, [f"u://c/{i}" for i in range(1000, 2500)])
-    got = {r["canon_url"] for r in B.seen_anti_join(cand, seen).collect()}
-    want = {r["canon_url"] for r in cand.join(seen, "canon_url", "left_anti").collect()}
-    assert got == want
-    assert got == {f"u://c/{i}" for i in range(1000)}
 
 
 def test_add_seeds_cross_campaign(spark, world, tmp_path_factory):
@@ -157,6 +190,7 @@ def test_add_seeds_incremental_bloom(spark, world, tmp_path_factory, monkeypatch
     counts = scheduler.add_seeds(spark, cat, mk_frontier(batch1), robots)
     assert counts["added"] == 4
     assert cat.file_sets("bloom") == 1, "bloom state persisted after first ingest"
+    assert [r["shard"] for r in cat.read("bloom").collect()] == [0]
 
     # from now on, any full rebuild is a bug: build_bloom scans the pool
     def boom(*a, **k):

@@ -352,7 +352,7 @@ class ParquetCatalog:
     def writer_lock(self):
         """Exclusive inter-process lock for multi-step read-modify-write
         transactions whose state spans MORE than one commit-critical
-        section — e.g. the seed ingest's bloom delta (read shards, OR in the
+        section — e.g. the seed ingest's bloom delta (read the bitmap, OR in the
         batch, publish), where two concurrent ingests would each read the
         same base bitmap and the second commit would silently drop the
         first's delta. Distinct lock file from the commit flock: a holder

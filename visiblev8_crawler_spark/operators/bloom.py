@@ -3,10 +3,9 @@ URL-seen filter").
 
 The reference's seen-set is a Postgres point lookup per submitted URL
 (backend/app/api/api_v1/endpoints/tasks.py:148-156: ``Submission.url == url``
--> return cached submission id). At 10^10-frontier scale the Spark analog —
-an exact ``left_anti`` join of every incoming seed batch against the full
-``url_seen`` table — shuffles the entire seen set per ingest. This module
-cuts that to (bloom-positive subset only) while staying *exact*:
+-> return cached submission id). Seed ingest (``scheduler.add_seeds``)
+screens each batch with this filter and confirms only the positives
+exactly:
 
     1. build one Bloom bitmap over the seen set (distributed: per-partition
        numpy bitmaps via mapInPandas, OR-reduced on the driver),
@@ -14,19 +13,12 @@ cuts that to (bloom-positive subset only) while staying *exact*:
        JVM-computed xxhash64 pairs (no per-row Python, no string transfer —
        only two int64 columns cross the Arrow boundary),
     3. candidates the bloom rejects are *definitely unseen* (Bloom filters
-       have no false negatives) and skip the join entirely; only the
-       bloom-positive subset (true dups + ~fpp false positives) goes through
-       the exact anti-join.
+       have no false negatives) and skip the exact check; only the
+       bloom-positive subset (true dups + ~fpp false positives) is confirmed
+       against the pool.
 
-With a 1% fpp and a typical ingest dup-rate d, the anti-join's probe side
-shrinks to (d + 0.01) of the batch, and the seen-set side can be pruned by
-the join's own runtime filters. The bitmap itself is the only broadcast
-state: sized at ~9.6 bits/key for 1% fpp (1.2 MB per 10^6 seen URLs). At
-10^10 seen URLs a single bitmap would be ~12 GB — past broadcast range — so
-``shards`` splits key-space by hash prefix into independent bitmaps, one per
-executor-memory-sized range; each candidate probes exactly one shard, and
-shards can be built/refreshed independently per wave. The probe math is
-identical either way.
+The bitmap is the only broadcast state: ~9.6 bits/key at 1% fpp (1.2 MB per
+10^6 seen URLs).
 
 Hash discipline: double hashing g_i = h1 + i*h2 (mod m) over two independent
 xxhash64 values computed JVM-side (Kirsch-Mitzenmacher — k probes from 2
@@ -42,13 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    IntegerType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BinaryType, BooleanType, StructField, StructType
 
 _H2_SALT = "vv8-bloom-h2"  # second independent hash: xxhash64(key, salt)
 
@@ -102,73 +88,29 @@ class BloomFilter:
         return out
 
 
-def _shard_of(h1: np.ndarray, n_shards: int) -> np.ndarray:
-    """Shard selector from h1's HIGH bits. Positions inside a bitmap are
-    h1-mod-m (low bits); sharding on low bits too would make every member of
-    a shard agree on h1 mod gcd(n_shards, m) and collapse the first probe
-    onto a fraction of the bitmap (measured: 6x the configured fpp)."""
-    return (h1 >> np.uint64(33)) % np.uint64(n_shards)
-
-
-class ShardedBloom:
-    """Key-space-sharded Bloom: shard = high-bits(h1) % n_shards, each shard its own
-    bitmap. Same probe semantics as BloomFilter; the point is operational —
-    at 10^10 seen URLs one bitmap is ~12 GB (past broadcast range), while
-    shards broadcast/refresh independently and can live on different
-    executors. Sharding never changes the verdict: every key probes exactly
-    the shard it was added to."""
-
-    def __init__(self, shards: list[BloomFilter]):
-        assert shards
-        self.shards = shards
-
-    def maybe_contains(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        out = np.zeros(len(h1), dtype=bool)
-        sid = _shard_of(h1, len(self.shards))
-        for i, bf in enumerate(self.shards):
-            m = sid == np.uint64(i)
-            if m.any():
-                out[m] = bf.maybe_contains(h1[m], h2[m])
-        return out
-
-
-def _build_bitmaps(
-    df: DataFrame, col: str, n_bits: int, n_hashes: int, shards: int
-) -> list[np.ndarray]:
-    """One distributed pass over ``df`` -> per-shard bitmaps with EXPLICIT
-    params (no count, no sizing): each partition sets bits into its own
-    bitmaps (mapInPandas, one binary row per shard per partition), the driver
-    ORs them per shard. Cost is O(len(df)) + P × shards × (n_bits/8) bytes of
-    driver traffic — this is both the full build and the incremental delta
-    (same params ⇒ the delta bitmap ORs into an existing one losslessly)."""
+def _build_bitmap(df: DataFrame, col: str, n_bits: int, n_hashes: int) -> np.ndarray:
+    """One distributed pass over ``df`` -> one bitmap with EXPLICIT params
+    (no count, no sizing): each partition sets bits into its own bitmap
+    (mapInPandas, one binary row per partition), the driver ORs them. Cost
+    is O(len(df)) + P × (n_bits/8) bytes of driver traffic — this is both
+    the full build and the incremental delta (same params ⇒ the delta bitmap
+    ORs into an existing one losslessly)."""
     hashed = df.select(*_hash_cols(col))
-    out_schema = StructType(
-        [StructField("shard", IntegerType()), StructField("bits", BinaryType())]
-    )
+    out_schema = StructType([StructField("bits", BinaryType())])
 
     def per_partition(batches):
-        parts = [
-            BloomFilter(n_bits, n_hashes, np.zeros(n_bits // 8, dtype=np.uint8))
-            for _ in range(shards)
-        ]
-        touched = [False] * shards
+        part = BloomFilter(n_bits, n_hashes, np.zeros(n_bits // 8, dtype=np.uint8))
+        touched = False
         for b in batches:
-            if not len(b):
-                continue
-            h1, h2 = _to_u64(b["_bh1"]), _to_u64(b["_bh2"])
-            sid = _shard_of(h1, shards)
-            for i in range(shards):
-                m = sid == np.uint64(i)
-                if m.any():
-                    parts[i].add_hashes(h1[m], h2[m])
-                    touched[i] = True
-        for i in range(shards):
-            if touched[i]:
-                yield pd.DataFrame({"shard": [i], "bits": [parts[i].bits.tobytes()]})
+            if len(b):
+                part.add_hashes(_to_u64(b["_bh1"]), _to_u64(b["_bh2"]))
+                touched = True
+        if touched:
+            yield pd.DataFrame({"bits": [part.bits.tobytes()]})
 
-    bits = [np.zeros(n_bits // 8, dtype=np.uint8) for _ in range(shards)]
+    bits = np.zeros(n_bits // 8, dtype=np.uint8)
     for row in hashed.mapInPandas(per_partition, out_schema).collect():
-        bits[row["shard"]] |= np.frombuffer(row["bits"], dtype=np.uint8)
+        bits |= np.frombuffer(row["bits"], dtype=np.uint8)
     return bits
 
 
@@ -177,73 +119,51 @@ def build_bloom(
     col: str = "canon_url",
     capacity: int | None = None,
     fpp: float = 0.01,
-    shards: int = 1,
-) -> BloomFilter | ShardedBloom:
+) -> BloomFilter:
     """Size from ``capacity`` (or count ``df``) and build in one pass."""
     if capacity is None:
         capacity = df.count()
-    n_bits, n_hashes = BloomFilter.params_for(max(capacity // shards, 1), fpp)
-    bits = _build_bitmaps(df, col, n_bits, n_hashes, shards)
-    if shards == 1:
-        return BloomFilter(n_bits, n_hashes, bits[0])
-    return ShardedBloom([BloomFilter(n_bits, n_hashes, b) for b in bits])
+    n_bits, n_hashes = BloomFilter.params_for(capacity, fpp)
+    return BloomFilter(n_bits, n_hashes, _build_bitmap(df, col, n_bits, n_hashes))
 
 
-def bloom_or_delta(
-    bloom: BloomFilter | ShardedBloom, df: DataFrame, col: str = "canon_url"
-) -> BloomFilter | ShardedBloom:
+def bloom_or_delta(bloom: BloomFilter, df: DataFrame, col: str = "canon_url") -> BloomFilter:
     """Incremental maintenance: OR a delta build of ``df`` (same params) into
-    ``bloom``. O(len(df)), never O(seen-set) — the per-ingest cost the
-    crawl cache needs at 10^10 URLs. Returns a new filter (inputs immutable)."""
-    parts = bloom.shards if isinstance(bloom, ShardedBloom) else [bloom]
-    n_bits, n_hashes, shards = parts[0].n_bits, parts[0].n_hashes, len(parts)
-    delta = _build_bitmaps(df, col, n_bits, n_hashes, shards)
-    merged = [
-        BloomFilter(n_bits, n_hashes, bf.bits | d) for bf, d in zip(parts, delta)
-    ]
-    return merged[0] if shards == 1 else ShardedBloom(merged)
+    ``bloom``. O(len(df)), never O(seen-set). Returns a new filter (inputs
+    immutable)."""
+    delta = _build_bitmap(df, col, bloom.n_bits, bloom.n_hashes)
+    return BloomFilter(bloom.n_bits, bloom.n_hashes, bloom.bits | delta)
 
 
-# -- catalog (de)serialization: one row per shard -----------------------------
-
-BLOOM_STATE_SCHEMA = "shard int, n_bits long, n_hashes int, capacity long, n_added long, bits binary"
+# -- catalog (de)serialization: one row, ``shard`` always 0 -------------------
 
 
-def bloom_to_rows(
-    bloom: BloomFilter | ShardedBloom, capacity: int, n_added: int
-) -> list[tuple]:
-    parts = bloom.shards if isinstance(bloom, ShardedBloom) else [bloom]
-    return [
-        (i, bf.n_bits, bf.n_hashes, capacity, n_added, bf.bits.tobytes())
-        for i, bf in enumerate(parts)
-    ]
+def bloom_to_rows(bloom: BloomFilter, capacity: int, n_added: int) -> list[tuple]:
+    return [(0, bloom.n_bits, bloom.n_hashes, capacity, n_added, bloom.bits.tobytes())]
 
 
-def bloom_from_rows(rows) -> tuple[BloomFilter | ShardedBloom, int, int]:
-    rows = sorted(rows, key=lambda r: r["shard"])
-    parts = [
-        BloomFilter(
-            int(r["n_bits"]),
-            int(r["n_hashes"]),
-            np.frombuffer(bytes(r["bits"]), dtype=np.uint8).copy(),
-        )
-        for r in rows
-    ]
-    bloom = parts[0] if len(parts) == 1 else ShardedBloom(parts)
-    return bloom, int(rows[0]["capacity"]), int(rows[0]["n_added"])
+def bloom_from_rows(rows) -> tuple[BloomFilter, int, int]:
+    """Inverse of ``bloom_to_rows``: exactly one row, or ValueError."""
+    if len(rows) != 1:
+        raise ValueError(f"bloom state must be one row, got {len(rows)}")
+    (r,) = rows
+    bloom = BloomFilter(
+        int(r["n_bits"]),
+        int(r["n_hashes"]),
+        np.frombuffer(bytes(r["bits"]), dtype=np.uint8).copy(),
+    )
+    return bloom, int(r["capacity"]), int(r["n_added"])
 
 
 def with_bloom_maybe(
     df: DataFrame,
-    bloom: BloomFilter | ShardedBloom,
+    bloom: BloomFilter,
     col: str = "canon_url",
     out: str = "maybe_seen",
 ) -> DataFrame:
     """Add a boolean ``out`` column: bloom verdict for ``col``. The UDF sees
     only the two int64 hash columns (JVM-computed), so the Arrow transfer is
-    16 bytes/row regardless of URL length. Works for single or sharded
-    filters (both are broadcast; at true 10^10 scale the sharded form is
-    what keeps each broadcast block executor-sized)."""
+    16 bytes/row regardless of URL length."""
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(bloom)
 
@@ -252,26 +172,3 @@ def with_bloom_maybe(
         return pd.Series(bc.value.maybe_contains(_to_u64(h1), _to_u64(h2)))
 
     return df.withColumn(out, probe(*_hash_cols(col)))
-
-
-def seen_anti_join(
-    candidates: DataFrame,
-    seen: DataFrame,
-    col: str = "canon_url",
-    bloom: BloomFilter | ShardedBloom | None = None,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """Exact ``candidates ANTI JOIN seen ON col`` with a Bloom pre-filter:
-    bloom-negative rows bypass the join (no false negatives ⇒ exactness is
-    preserved); only bloom-positive rows are joined. Equivalent to
-    ``candidates.join(seen, col, 'left_anti')`` for every input."""
-    if bloom is None:
-        bloom = build_bloom(seen, col, fpp=fpp)
-    flagged = with_bloom_maybe(candidates, bloom, col)
-    clean = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspect = (
-        flagged.filter(F.col("maybe_seen"))
-        .drop("maybe_seen")
-        .join(seen.select(col).distinct(), col, "left_anti")
-    )
-    return clean.unionByName(suspect)

@@ -106,6 +106,17 @@ def _bucket_expr_spark(col: Column) -> Column:
     return b
 
 
+def _bucket_py(qv: list[float]) -> int:
+    """``_bucket_expr_spark`` for one driver-side vector. ``not (x <= 0)``
+    keeps Spark's sign rule: NaN orders above every value, so Spark's
+    ``NaN > 0`` is true where Python's is false."""
+    return (
+        (4 if not qv[0] <= 0 else 0)
+        + (2 if not qv[7] <= 0 else 0)
+        + (1 if not qv[21] <= 0 else 0)
+    )
+
+
 _BUCKET_SQL = (
     "(CASE WHEN {v}[1] > 0 THEN 4 ELSE 0 END + CASE WHEN {v}[8] > 0 THEN 2 ELSE 0 END"
     " + CASE WHEN {v}[22] > 0 THEN 1 ELSE 0 END)"
@@ -121,7 +132,7 @@ _BUCKET_SQL = (
 )
 def embedding_lsh_topk(spark, sf_dir):
     qv = _query_vec(spark, sf_dir)
-    qbucket = (4 if qv[0] > 0 else 0) + (2 if qv[7] > 0 else 0) + (1 if qv[21] > 0 else 0)
+    qbucket = _bucket_py(qv)
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
     pruned = emb.filter(_bucket_expr_spark(F.col("embedding")) == qbucket)
     return (
@@ -157,7 +168,7 @@ _MULTIPROBE_ORACLE_SQL = (
 )
 def embedding_lsh_multiprobe_topk(spark, sf_dir):
     qv = _query_vec(spark, sf_dir)
-    qbucket = (4 if qv[0] > 0 else 0) + (2 if qv[7] > 0 else 0) + (1 if qv[21] > 0 else 0)
+    qbucket = _bucket_py(qv)
     probes = [qbucket ^ d for d in (0, 1, 2, 4)]
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") != _QUERY_VEC_ID)
     pruned = emb.filter(_bucket_expr_spark(F.col("embedding")).isin(probes))

@@ -1149,10 +1149,20 @@ _SESSION_WINDOW_ORACLE_SQL = """
     "in the gate, which also pins the exact-gap boundary case.",
 )
 def events_session_window(spark, sf_dir):
-    # one shared aggregation body with the streaming wrapper
-    # (streaming/windows.py session_rollup_body) so batch and stream
-    # cannot drift; the NTZ ts column stays uncast here (batch needs no
-    # watermark, and the replica compares naive timestamps)
-    from ..streaming.windows import session_rollup_body
-
-    return session_rollup_body(load(spark, sf_dir, "events"))
+    # the NTZ ts column stays uncast (no watermark to feed, and the replica
+    # compares naive timestamps)
+    return (
+        load(spark, sf_dir, "events")
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
+        )
+        .select(
+            "user_id",
+            F.col("sw.start").alias("session_start"),
+            F.col("sw.end").alias("session_end"),
+            "n_events",
+            "sum_value",
+        )
+    )

@@ -16,7 +16,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 def conform(df: DataFrame, schema: StructType) -> DataFrame:
@@ -182,21 +181,10 @@ METRICS = StructType(
     ]
 )
 
-# the production metrics-plane rollup (streaming/windows.py
-# run_metrics_stream_update): one row per (tumbling window, event type),
-# upserted per micro-batch
-METRICS_WINDOWS = StructType(
-    [
-        StructField("win_start", TimestampType()),
-        StructField("event_type", StringType()),
-        StructField("n", LongType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
-
-# persisted URL-seen bloom shards (operators/bloom.py): maintained
+# persisted URL-seen bloom bitmap (operators/bloom.py): one row, maintained
 # incrementally by add_seeds — delta OR per ingest, O(pool) rebuild only on
-# capacity doubling
+# capacity doubling. ``shard`` is always 0; it stays so catalogs written
+# with it keep the same schema
 BLOOM_STATE = StructType(
     [
         StructField("shard", IntegerType()),

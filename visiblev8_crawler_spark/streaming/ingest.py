@@ -11,8 +11,8 @@ bulk seeds), consumed with ``spark.readStream.text`` and committed through
 ``foreachBatch`` -> ``scheduler.add_seeds``:
 
     seed files appear -> micro-batch of raw lines -> canonicalize/validate/
-    dedup (bloom + exact anti-join vs the crawl cache) -> frontier_prepared
-    append (atomic catalog commit)
+    dedup (bloom screen, bloom-positives confirmed exactly against the crawl
+    cache) -> frontier_prepared append (atomic catalog commit)
 
 Exactly-once: foreachBatch can replay a micro-batch after a crash, so the
 commit must be idempotent — add_seeds dedups against the catalog itself

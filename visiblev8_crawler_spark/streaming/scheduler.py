@@ -195,7 +195,7 @@ def host_state_df(
 class _HostState:
     """In-run politeness state: {host: [credit, last_wave, ok, failed]}.
 
-    Driver-held, like the bloom shards (the north_rule's own "broadcast
+    Driver-held, like the bloom bitmap (the north_rule's own "broadcast
     bloom" pattern): per-host aggregate state is orders of magnitude
     smaller than the frontier, so the driver evaluates every host's bucket
     (waves.bucket) itself and the selection plan only reads the resulting
@@ -375,7 +375,12 @@ def run_campaign(
 ) -> ParquetCatalog:
     """Run (or resume) a campaign to completion. ``stop_after_waves`` kills
     the loop early — used by the kill/resume test. Calling again with the
-    same catalog_root resumes from the committed watermark."""
+    same catalog_root resumes from the committed watermark.
+
+    For the whole call, ``spark.sql.execution.arrow.maxRecordsPerBatch`` is
+    set SESSION-WIDE to ``cfg.arrow_batch_rows`` (Spark has no per-operator
+    form of it) and restored on exit, so any query running concurrently in
+    the same session sees ``cfg.arrow_batch_rows``-row Arrow batches."""
     cat = open_catalog(spark, catalog_root)
 
     if not cat.prepared():
@@ -421,7 +426,7 @@ def run_campaign(
     pending = pending_df(cat, salt_width).localCheckpoint(eager=True)
     # politeness state resumes from the ledger too (empty ledger -> empty
     # state): the distributed fold replays exactly what the in-run updates
-    # computed, and its per-host aggregate comes to the driver (bloom-shard
+    # computed, and its per-host aggregate comes to the driver (bloom-bitmap
     # pattern; see _HostState)
     hstate = _HostState(
         host_state_df(cat, robots, cfg).collect(),
@@ -610,17 +615,40 @@ def add_seeds(
     cat: ParquetCatalog,
     new_frontier: DataFrame,
     robots: DataFrame,
-    fpp: float = 0.01,
 ) -> dict:
     """Serialized entry point for seed ingest: the bloom maintenance inside
-    is a read-modify-write spanning the whole call (read shards → OR the
+    is a read-modify-write spanning the whole call (read the bitmap → OR the
     batch delta → publish), so concurrent ingests take the catalog's writer
     lock and run one at a time — the 'single ingest writer' assumption is
     now enforced, not documented. Wave-loop commits are unaffected (they
     never touch the bloom or this lock). See _add_seeds_impl for the full
     semantics."""
     with cat.writer_lock():
-        return _add_seeds_impl(spark, cat, new_frontier, robots, fpp)
+        return _add_seeds_impl(spark, cat, new_frontier, robots)
+
+
+def _confirm_suspects(
+    suspect: DataFrame, pool_urls: DataFrame, seen_urls: DataFrame
+) -> DataFrame:
+    """Exact dispositions for the bloom-positive rows: ``reason`` is
+    'cached' for a crawled url, 'enqueued' for one only pooled, null for a
+    bloom false positive. Each probe streams the big side (pool, url_seen)
+    past a broadcast of the suspects' keys as a left-semi join, so neither
+    is shuffled however large it grows. The hit sets are unique per key and
+    no larger than the batch, so attaching them is two broadcast left
+    joins."""
+    keys = F.broadcast(suspect.select("canon_url"))
+    pool_hits = pool_urls.join(keys, "canon_url", "left_semi").withColumn("_pool", F.lit(True))
+    seen_hits = seen_urls.join(keys, "canon_url", "left_semi").withColumn("_seen", F.lit(True))
+    return (
+        suspect.join(F.broadcast(pool_hits), "canon_url", "left")
+        .join(F.broadcast(seen_hits), "canon_url", "left")
+        .withColumn(
+            "reason",
+            F.when(F.col("_seen"), "cached").when(F.col("_pool"), "enqueued"),
+        )
+        .drop("_pool", "_seen")
+    )
 
 
 def _add_seeds_impl(
@@ -628,7 +656,6 @@ def _add_seeds_impl(
     cat: ParquetCatalog,
     new_frontier: DataFrame,
     robots: DataFrame,
-    fpp: float = 0.01,
 ) -> dict:
     """Incremental seed ingest into a live/finished campaign — the rebuild of
     the reference's always-on submit path: new URLs arrive while a campaign
@@ -636,13 +663,11 @@ def _add_seeds_impl(
     against the crawl cache first (backend tasks.py:148-156, D1: a hit
     returns the cached submission instead of re-crawling).
 
-    The cache check is where 10^10 scale bites: an exact anti-join of every
-    ingest batch against the full seen-set reshuffles it each time. Here the
-    broadcast Bloom filter (operators/bloom.py) screens the batch first —
-    bloom-negative rows (the vast majority of genuinely new URLs) skip the
-    join entirely; only bloom-positive rows take the exact join, so exactness
-    is preserved while the join's probe side shrinks to (dup_rate + fpp) of
-    the batch.
+    The broadcast Bloom filter (operators/bloom.py) screens the batch first:
+    bloom-negative rows (the vast majority of genuinely new URLs) are
+    definitely unseen and skip the exact check. Only bloom-positive rows
+    (dup_rate + fpp of the batch) are confirmed against the pool and
+    url_seen, so exactness is preserved.
 
     New rows are re-sequenced after every seq already in the catalog, so one
     global crawl order (seq) stays total and deterministic across ingests.
@@ -651,20 +676,17 @@ def _add_seeds_impl(
     already-enqueued ones as 'enqueued', plus the usual invalid/duplicate/
     robots from preparation. Returns the per-disposition counts.
 
-    Bloom maintenance is INCREMENTAL: the bitmap shards live in the catalog
-    ('bloom' table), each ingest ORs in a delta built over just its own new
-    rows (O(batch)), and the updated shards publish in the same atomic
-    commit as the frontier append. A full O(pool) rebuild happens only when
-    n_added outgrows the sized capacity (doubling ⇒ amortized O(1) per row)
-    — never per ingest, which at 10^10 seen URLs is the difference between
-    a 12 GB-bitmap pass per batch and a few MB of delta OR.
+    Bloom maintenance is INCREMENTAL: the bitmap lives in the catalog
+    ('bloom' table, one row), each ingest ORs in a delta built over just its
+    own new rows (O(batch)), and the updated bitmap publishes in the same
+    atomic commit as the frontier append. A full O(pool) rebuild happens
+    only when n_added outgrows the sized capacity (doubling ⇒ amortized O(1)
+    per row) — never per ingest.
 
-    The remaining pool-sized work per ingest is the exact-confirm join for
-    bloom-POSITIVE rows only (a columnar canon_url scan of the pool as the
-    join's build side). At 10^10 that scan prunes via the join's runtime
-    filters and, on Iceberg, bucket-pruned storage-partitioned reads; the
-    bloom guarantees the fraction of rows that ever reach it is
-    (dup_rate + fpp) of the batch.
+    The confirm (_confirm_suspects) still scans the pool's and url_seen's
+    canon_url columns once each whenever a batch has any bloom-positive row,
+    but it streams them past a broadcast of the batch-sized suspect keys: no
+    exchange over the pool, at any pool size.
     """
     from ..operators.bloom import (
         bloom_from_rows,
@@ -694,29 +716,19 @@ def _add_seeds_impl(
         if n_added > capacity:  # outgrown: the amortized doubling rebuild
             n_added = pool_urls.count()
             capacity = max(2 * n_added, 1024)
-            bf = build_bloom(pool_urls, "canon_url", capacity=capacity, fpp=fpp)
+            bf = build_bloom(pool_urls, "canon_url", capacity=capacity)
     else:
         # first ingest on this catalog: one-time build over the pool with 2x
         # headroom so subsequent ingests stay delta-only
         n_added = pool_urls.count()
         capacity = max(2 * n_added, 1024)
-        bf = build_bloom(pool_urls, "canon_url", capacity=capacity, fpp=fpp)
+        bf = build_bloom(pool_urls, "canon_url", capacity=capacity)
     flagged = with_bloom_maybe(cand, bf).persist()
     clean = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspect = (
-        flagged.filter(F.col("maybe_seen"))
-        .drop("maybe_seen")
-        .join(pool_urls.withColumn("_pool", F.lit(True)), "canon_url", "left")
-        .join(
-            url_seen_df(cat).select("canon_url").withColumn("_seen", F.lit(True)),
-            "canon_url",
-            "left",
-        )
-        .withColumn(
-            "reason",
-            F.when(F.col("_seen"), "cached").when(F.col("_pool"), "enqueued"),
-        )
-        .drop("_pool", "_seen")
+    suspect = _confirm_suspects(
+        flagged.filter(F.col("maybe_seen")).drop("maybe_seen"),
+        pool_urls,
+        url_seen_df(cat).select("canon_url"),
     )
     ingested = schemas.conform(
         clean.unionByName(suspect), schemas.FRONTIER_PREPARED
@@ -733,7 +745,7 @@ def _add_seeds_impl(
         },
     }
     # incremental bloom: OR a delta over just this batch's newly-pooled rows
-    # (O(batch)); the updated shards and the frontier append publish in ONE
+    # (O(batch)); the updated bitmap and the frontier append publish in ONE
     # atomic commit, so the bloom can never disagree with the pool
     new_pool_urls = ingested.filter(F.col("reason").isNull()).select("canon_url")
     bf = bloom_or_delta(bf, new_pool_urls)
