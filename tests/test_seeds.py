@@ -4,6 +4,7 @@ end-to-end into prepare_frontier."""
 
 from pyspark.sql import functions as F
 
+from visiblev8_crawler_spark import schemas
 from visiblev8_crawler_spark.operators.dedup import prepare_frontier
 from visiblev8_crawler_spark.sources.seeds import frontier_from_text, frontier_from_tranco_csv
 
@@ -35,3 +36,47 @@ def test_tranco_csv(spark, tmp_path):
     rows = frontier_from_tranco_csv(spark, str(p)).collect()
     got = {r["seq"]: r["url"] for r in rows}
     assert got == {1: "http://example.com", 2: "http://foo.org", 4: "http://bar.net"}
+
+
+def test_prepare_frontier_never_builds_psl(spark, monkeypatch):
+    """Frontier prep takes only the canonical columns FRONTIER_PREPARED
+    keeps, so it must never build the public-suffix expression (seconds of
+    driver time per build, and etld1 is dropped at conform). Its rows still
+    equal the Python mirror's canonical form and the simulator's reasons."""
+    from visiblev8_crawler_spark.functions import psl
+    from visiblev8_crawler_spark.functions import urls as U
+    from visiblev8_crawler_spark.simulator import simulate_campaign
+    from visiblev8_crawler_spark.sources import synth
+
+    def _no_psl(*_a, **_k):
+        raise AssertionError("frontier prep built the public-suffix expression")
+
+    monkeypatch.setattr(psl, "etld1_col", _no_psl)
+    monkeypatch.setattr(U, "etld1_col", _no_psl)
+
+    fpdf = synth.generate_frontier_pdf(500, 200, 20)
+    rpdf = synth.generate_robots_pdf(20)
+    rpdf.loc[0, "full_block"] = True  # host0: the zipf head, many rows
+    rpdf.at[1, "disallow_prefixes"] = ["/img/img_00000000001"]
+    robots = spark.createDataFrame(rpdf, schema=schemas.ROBOTS)
+    prep = prepare_frontier(spark.createDataFrame(fpdf, schema=schemas.FRONTIER), robots)
+    rows = prep.withColumn("_h", F.xxhash64("canon_url")).collect()
+
+    assert sorted(r["seq"] for r in rows) == sorted(fpdf["seq"])
+    for r in rows:
+        c = U.canonicalize(r["url"])
+        assert (r["canon_url"], r["host"], r["path"]) == (
+            c["canon_url"], c["host"], c["path"]
+        ), r["url"]
+        assert r["url_hash64"] == r["_h"]
+
+    sim = simulate_campaign(
+        fpdf.to_dict("records"),
+        {r["host"]: r for r in rpdf.to_dict("records")},
+        {},
+        max_waves=0,
+    )
+    want = {seq: reason for seq, _u, reason in sim.rejected}
+    got = {r["seq"]: r["reason"] for r in rows if r["reason"] is not None}
+    assert got == want
+    assert set(want.values()) == {"invalid", "duplicate", "robots"}

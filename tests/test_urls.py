@@ -222,9 +222,11 @@ def test_etld1_public_suffix_spark(spark):
 
 def test_etld1_full_list_plan_compile_bounded(spark):
     """The full generated list is ~8.3k InSet entries across the decision
-    chain; the expression is a plan-time constant, but analysis/codegen must
-    stay cheap enough that every canonicalization projection can afford it.
-    Measured ~0.5 s cold; gate at 10 s so only a pathological blowup fails."""
+    chain. Building the expression makes one py4j call per literal
+    (PySpark's ``Column.isin``): measured 3.0-4.2 s of driver time on a
+    4-core box, plus 0.2-1.6 s of analysis and physical planning — which is
+    why frontier prep never builds it. Gate at 10 s so only a pathological
+    blowup fails."""
     import time
 
     import pyspark.sql.functions as F

@@ -12,10 +12,15 @@ Spark-first design: NO join and NO Python UDF — the host's last-k label
 strings are tested for membership in literal sets, which Catalyst compiles
 to InSet (O(1) hash probe inside whole-stage codegen). A broadcast-join
 variant would also work but would turn every canonicalization projection
-into a join; even at 8k+ entries the InSet sets are a one-time plan
-constant (compile cost measured in tests/test_urls.py) and keep
-``with_canonical`` map-only. The pure-Python mirror below implements the
-identical decision tree so the reference simulator agrees bit-for-bit.
+into a join, and at 8k+ entries the InSet sets are a plan constant that
+keeps ``with_canonical`` map-only. That constant is not cheap to build:
+PySpark's ``Column.isin`` makes one py4j call per literal, so building
+``etld1_col`` costs 3.0-4.2 s of driver time on a 4-core box before any
+analysis (analysis + physical planning add 0.2-1.6 s; the 10 s bound is
+tests/test_urls.py::test_etld1_full_list_plan_compile_bounded). Frontier
+prep (operators/dedup.py) therefore never calls it: FRONTIER_PREPARED has
+no etld1 column. The pure-Python mirror below implements the identical
+decision tree so the reference simulator agrees bit-for-bit.
 
 PSL semantics implemented (exception first, then longest rule wins):
 - exception rules (``!www.ck``)   -> suffix = rule minus its leftmost label

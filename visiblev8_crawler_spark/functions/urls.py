@@ -68,7 +68,6 @@ def _canon_cols(url: Column) -> dict[str, Column]:
         "host": host,
         "path": path,
         "query": query,
-        "etld1": etld1_col(host),
         "stemmed": stemmed,
         "canon_url": canon,
         "valid": valid,
@@ -76,14 +75,20 @@ def _canon_cols(url: Column) -> dict[str, Column]:
 
 
 def with_canonical(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Add canonical columns + hash keys. Replaces the frontier row's own
-    ``host`` column with the canonical host (derived, not trusted)."""
-    cols = _canon_cols(F.col(url_col))
+    """Add the full ``urls``-dimension columns (scheme, host, path, query,
+    etld1, stemmed, canon_url, valid) + hash keys (url_sha256, url_hash64).
+    Replaces the frontier row's own ``host`` column with the canonical host
+    (derived, not trusted); etld1 is derived over that column. Frontier
+    prep (operators/dedup.py) takes only canon_url, url_hash64, host, path
+    and valid, from ``_canon_cols``, so it never builds etld1's public-suffix
+    expression (psl.py: seconds of driver time per build)."""
     out = df
-    for name, c in cols.items():
+    for name, c in _canon_cols(F.col(url_col)).items():
         out = out.withColumn(name, c)
-    return out.withColumn("url_sha256", F.sha2(F.col("canon_url"), 256)).withColumn(
-        "url_hash64", F.xxhash64(F.col("canon_url"))
+    return (
+        out.withColumn("etld1", etld1_col(F.col("host")))
+        .withColumn("url_sha256", F.sha2(F.col("canon_url"), 256))
+        .withColumn("url_hash64", F.xxhash64(F.col("canon_url")))
     )
 
 

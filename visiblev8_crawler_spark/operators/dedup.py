@@ -33,7 +33,13 @@ def prepare_frontier(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     window dedup) is computed once and committed once; pending and rejected
     are then derived by scanning the committed parquet (scheduler.py), never
     by recomputing this plan. At 10^10 rows that is the difference between
-    one shuffle and two."""
+    one shuffle and two.
+
+    Canonicalization takes only the columns FRONTIER_PREPARED keeps
+    (canon_url, url_hash64, host, path) plus ``valid`` for ``reason``, from
+    the same expressions as ``urls.with_canonical``. The full ``urls``
+    dimension would also build the public-suffix expression (functions/
+    psl.py: seconds of driver time per build) only for conform to drop it."""
     # task_id + actions are per-row config passthrough (submissions.actions,
     # 3_vv8_backend_init.sql:12-18); null-fill for sources that carry none
     # (plain seed files) so the FRONTIER_PREPARED contract always holds
@@ -42,9 +48,11 @@ def prepare_frontier(frontier: DataFrame, robots: DataFrame) -> DataFrame:
                      ("crawler_args", "array<string>")):
         if opt not in src.columns:
             src = src.withColumn(opt, F.lit(None).cast(typ))
-    canon = U.with_canonical(
-        src.select("seq", "url", "priority", "task_id", "actions", "crawler_args")
-    )
+    cols = U._canon_cols(F.col("url"))
+    canon = src.select(
+        "seq", "url", "priority", "task_id", "actions", "crawler_args",
+        *(cols[k].alias(k) for k in ("canon_url", "host", "path", "valid")),
+    ).withColumn("url_hash64", F.xxhash64(F.col("canon_url")))
 
     # rank within (canon_url, valid) so an invalid row can never steal the
     # first-occurrence slot from the valid rows of the same canonical url

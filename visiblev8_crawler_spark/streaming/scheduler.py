@@ -424,12 +424,13 @@ def run_campaign(
         cfg.salt_width if cfg.salt_width is not None else choose_salt_width(pool_df(cat))
     )
     pending = pending_df(cat, salt_width).localCheckpoint(eager=True)
-    # politeness state resumes from the ledger too (empty ledger -> empty
-    # state): the distributed fold replays exactly what the in-run updates
-    # computed, and its per-host aggregate comes to the driver (bloom-bitmap
-    # pattern; see _HostState)
+    # politeness state resumes from the ledger too: the distributed fold
+    # replays exactly what the in-run updates computed, and its per-host
+    # aggregate comes to the driver (bloom-bitmap pattern; see _HostState).
+    # A catalog with no fetches file set has an empty ledger, hence empty
+    # state, so a fresh campaign skips the fold job.
     hstate = _HostState(
-        host_state_df(cat, robots, cfg).collect(),
+        host_state_df(cat, robots, cfg).collect() if cat.file_sets("fetches") else [],
         robots_dim(robots, cfg.default_budget).collect(),
         cfg,
     )
