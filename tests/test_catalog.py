@@ -514,3 +514,29 @@ def test_poll_expired_cursor_rebaselines(spark, tmp_path_factory):
     delta, _, rebaselined = cat.poll("t", next_cursor)
     assert not rebaselined
     assert {(r["k"], r["v"]) for r in delta.collect()} == {("d", 4)}
+
+
+def test_empty_table_reads_are_empty_local_relations(spark, tmp_path_factory):
+    """Every read of a table with no file sets is an empty LocalRelation
+    with the table's schema (nullability included), so Catalyst folds
+    joins and unions over it away (PropagateEmptyRelation) instead of
+    planning exchanges over an RDD scan it cannot see into. ``read_since``
+    and ``poll`` reach that case through an empty delta."""
+    E = StructType([StructField("k", StringType(), False), StructField("v", IntegerType())])
+    root = str(tmp_path_factory.mktemp("cat_empty"))
+    cat = ParquetCatalog(spark, root, {"t": T, "e": E})
+    first_poll = cat.poll("e", None)  # before any commit
+    cat.commit("w0", appends={"t": spark.createDataFrame([("a", 1)], T)})
+    seq = cat.commit_seq()
+    reads = {
+        "read": ("e", cat.read("e")),
+        "read_at": ("e", cat.read_at("e", seq)),
+        "read_since": ("t", cat.read_since("t", seq)),
+        "poll before any commit": ("e", first_poll[0]),
+        "poll": ("t", cat.poll("t", seq)[0]),
+    }
+    for how, (name, df) in reads.items():
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation", (how, plan.toString())
+        assert plan.data().isEmpty(), how
+        assert df.schema == cat.schemas[name], how

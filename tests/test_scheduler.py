@@ -3,6 +3,8 @@ reference simulator exactly — crawl order, URL-seen set, per-row fetch
 verdicts, rejects, per-wave counters — and a killed campaign resumes to an
 identical final state (url_sender.py:146-200 semantics)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -469,3 +471,83 @@ def test_incremental_fetch_poll_via_snapshots(spark_run):
     }
     assert delta == {(u, w) for (u, w) in full if w > 1}
     assert cat.read_since("fetches", cat.commit_seq()).count() == 0
+
+
+def _plan_nodes(plan) -> list[str]:
+    """The operator name on each line of a plan's tree string."""
+    return [
+        re.sub(r"^[\s:|+-]*(\*\(\d+\)\s*)?", "", line).split(" ")[0]
+        for line in plan.toString().splitlines()
+        if line.strip()
+    ]
+
+
+def test_fresh_pending_plans_as_one_pool_scan(spark, world, tmp_path_factory):
+    """On a freshly prepared catalog the fetch ledger has no file sets, so
+    pending_df's anti-join against it and its whole retries branch fold
+    away at optimization time: no join, and no exchange, is left over the
+    pool scan."""
+    root = str(tmp_path_factory.mktemp("cat_fresh_plan"))
+    frontier = spark.read.parquet(world["paths"]["frontier"])
+    robots = spark.read.parquet(world["paths"]["robots"])
+    images = spark.read.parquet(world["paths"]["images"])
+    cat = scheduler.run_campaign(
+        spark, root, frontier, robots, images, CrawlConfig(batch_size=BATCH),
+        stop_after_waves=0,
+    )
+    assert cat.prepared() and cat.watermark() == -1
+    pending = scheduler.pending_df(cat)
+    qe = pending._jdf.queryExecution()
+    assert "Join" not in _plan_nodes(qe.optimizedPlan()), qe.optimizedPlan().toString()
+    assert not [n for n in _plan_nodes(qe.executedPlan()) if "Exchange" in n], (
+        qe.executedPlan().toString()
+    )
+    assert pending.count() == scheduler.pool_df(cat).count()
+
+
+def test_failed_start_job_fails_campaign_cleanly(
+    spark, world, spark_run, tmp_path_factory, monkeypatch
+):
+    """The start's background jobs re-raise on the caller's thread: a fresh
+    call whose Python-worker warm-up fails, and a resume whose host-state
+    fold fails, each raise that error out of run_campaign with the
+    watermark unmoved. Clean re-runs then finish identical to the
+    uninterrupted campaign."""
+    import threading
+
+    root = str(tmp_path_factory.mktemp("cat_startfail"))
+    frontier = spark.read.parquet(world["paths"]["frontier"])
+    robots = spark.read.parquet(world["paths"]["robots"])
+    images = spark.read.parquet(world["paths"]["images"])
+    cfg = CrawlConfig(batch_size=BATCH)
+    ran_on = []
+
+    def bomb(*args, **kwargs):
+        ran_on.append(threading.current_thread())
+        raise RuntimeError("injected start failure")
+
+    monkeypatch.setattr(scheduler, "_warm_python_workers", bomb)
+    with pytest.raises(RuntimeError, match="injected start failure"):
+        scheduler.run_campaign(spark, root, frontier, robots, images, cfg)
+    monkeypatch.undo()
+    cat = scheduler.open_catalog(spark, root)
+    assert cat.watermark() == -1
+    scheduler.run_campaign(spark, root, frontier, robots, images, cfg, stop_after_waves=2)
+    assert cat.watermark() == 1
+
+    monkeypatch.setattr(scheduler, "host_state_df", bomb)
+    with pytest.raises(RuntimeError, match="injected start failure"):
+        scheduler.run_campaign(spark, root, frontier, robots, images, cfg)
+    monkeypatch.undo()
+    assert cat.watermark() == 1
+    assert len(ran_on) == 2 and threading.main_thread() not in ran_on
+
+    cat = scheduler.run_campaign(spark, root, frontier, robots, images, cfg)
+    for table, keys in [
+        ("fetches", ["canon_url", "attempt", "wave_id", "order_in_wave", "status"]),
+        ("metrics", ["wave_id", "n_attempted", "n_ok", "n_failed"]),
+    ]:
+        a = {tuple(r[k] for k in keys) for r in cat.read(table).collect()}
+        b = {tuple(r[k] for k in keys) for r in spark_run.read(table).collect()}
+        assert a == b, table
+    assert scheduler.pending_df(cat).count() == 0

@@ -153,10 +153,29 @@ class ParquetCatalog:
 
     # -- reads -------------------------------------------------------------
     def read(self, name: str) -> DataFrame:
-        paths = self._load_manifest()["tables"].get(name, [])
-        if not paths:
-            return self.spark.createDataFrame([], self.schemas[name])
-        return self.spark.read.schema(self.schemas[name]).parquet(*paths)
+        """The table as the committed manifest publishes it.
+
+        A table with no file sets reads as an empty ``LocalRelation``, which
+        Catalyst knows is empty: joins, filters and unions over it fold away
+        at optimization time (PropagateEmptyRelation). A fresh campaign's
+        ``pending_df`` is the case that matters: the anti-join against the
+        empty ledger and the whole retries branch drop out, and it plans as
+        one scan of the pool. PySpark's ``createDataFrame([], schema)``
+        plans as an RDD scan the optimizer cannot see into, which left two
+        sort-merge joins and four exchanges over nothing."""
+        return self._scan(name, self._load_manifest()["tables"].get(name, []))
+
+    def _scan(self, name: str, paths: list[str]) -> DataFrame:
+        """``paths`` read with the table's schema; no paths -> an empty
+        ``LocalRelation`` with that schema, built JVM-side (see ``read``)."""
+        if paths:
+            return self.spark.read.schema(self.schemas[name]).parquet(*paths)
+        js = self.spark._jsparkSession
+        jdf = js.createDataFrame(
+            self.spark._jvm.java.util.ArrayList(),
+            js.parseDataType(self.schemas[name].json()),
+        )
+        return DataFrame(jdf, self.spark)
 
     # -- snapshot history (Iceberg time travel / expire analog) ------------
     def _snapdir(self) -> str:
@@ -188,10 +207,7 @@ class ParquetCatalog:
         never deleted by commits or compaction, only by expiry, so an old
         snapshot's paths remain readable (e.g. diff the url_seen set
         between two waves, or audit what a compaction folded)."""
-        paths = self._load_snapshot(seq)["tables"].get(name, [])
-        if not paths:
-            return self.spark.createDataFrame([], self.schemas[name])
-        return self.spark.read.schema(self.schemas[name]).parquet(*paths)
+        return self._scan(name, self._load_snapshot(seq)["tables"].get(name, []))
 
     def read_since(self, name: str, seq: int) -> DataFrame:
         """Incremental scan (Iceberg incremental-append-scan analog): only
@@ -228,10 +244,7 @@ class ParquetCatalog:
         else:
             since = set()
         now = m["tables"].get(name, [])
-        new = [p for p in now if p not in since]
-        if not new:
-            return self.spark.createDataFrame([], self.schemas[name])
-        return self.spark.read.schema(self.schemas[name]).parquet(*new)
+        return self._scan(name, [p for p in now if p not in since])
 
     def poll(self, name: str, cursor: int | None) -> tuple[DataFrame, int, bool]:
         """One step of an incremental consumer loop (the sharpened
@@ -259,7 +272,7 @@ class ParquetCatalog:
         """
         next_cursor = self.commit_seq()
         if not next_cursor:
-            return self.spark.createDataFrame([], self.schemas[name]), 0, False
+            return self._scan(name, []), 0, False
         now = self._load_snapshot(next_cursor)
         now_paths = now["tables"].get(name, [])
         if not cursor:
@@ -282,10 +295,7 @@ class ParquetCatalog:
                 since = set(then["tables"].get(name, []))
                 rebaselined = False
                 new = [p for p in now_paths if p not in since]
-        if not new:
-            return self.spark.createDataFrame([], self.schemas[name]), next_cursor, rebaselined
-        df = self.spark.read.schema(self.schemas[name]).parquet(*new)
-        return df, next_cursor, rebaselined
+        return self._scan(name, new), next_cursor, rebaselined
 
     def expire_snapshots(self, keep_last: int = 64, min_age_s: float = 0.0) -> dict:
         """Drop all but the newest ``keep_last`` snapshots and DELETE every

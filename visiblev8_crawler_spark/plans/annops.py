@@ -976,8 +976,9 @@ def min_label_components(labels, edges, extra_rounds: int = 2, contract: bool = 
     # task latency (measured at 190k edge rows: 13.5 s at 32 partitions,
     # 6.8 s at 4). Scale-adaptive: partitions grow linearly with the active
     # graph and cap at cluster parallelism, so a 10^9-edge graph still gets
-    # a full-width shuffle. Restored in finally — the surrounding query is
-    # unaffected.
+    # a full-width shuffle. The loop sizes its aggregations with an
+    # explicit repartition(loop_parts, ...), not a session conf flip that a
+    # query running concurrently in the same session would see.
     sess = labels.sparkSession
     if contract and edges.count() >= _CONTRACT_MIN_EDGES:
         # one no-shuffle pass over the (checkpointed) edges; the star
@@ -1005,14 +1006,9 @@ def min_label_components(labels, edges, extra_rounds: int = 2, contract: bool = 
     loop_parts = max(2, min(
         sess.sparkContext.defaultParallelism, (n + n_edges) // 50_000 + 1
     ))
-    prev_parts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        labels, rounds, converged = _min_label_loop(
-            labels, edges, n, max_rounds, comp_t, converged
-        )
-    finally:
-        sess.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    labels, rounds, converged = _min_label_loop(
+        labels, edges, n, max_rounds, comp_t, converged, loop_parts
+    )
     return (
         labels.select("vec_id", "component").unionByName(passive),
         rounds,
@@ -1023,7 +1019,7 @@ def min_label_components(labels, edges, extra_rounds: int = 2, contract: bool = 
 _CC_UNROLL = 2  # propagation steps fused per action (see loop docstring)
 
 
-def _min_label_loop(labels, edges, n, max_rounds, comp_t, converged):
+def _min_label_loop(labels, edges, n, max_rounds, comp_t, converged, parts):
     """Iterate min-label propagation to the fixpoint.
 
     Round-6 shape changes (each proven output-identical):
@@ -1040,7 +1036,12 @@ def _min_label_loop(labels, edges, n, max_rounds, comp_t, converged):
       implies the fixpoint exactly (propagation is monotone: labels only
       decrease, and an unchanged window means no decrease anywhere); a
       converged graph may run up to _CC_UNROLL-1 extra no-op steps,
-      which cannot alter the labels."""
+      which cannot alter the labels.
+    - both min-aggregations group a ``repartition(parts, "vec_id")``, so
+      their exchange is ``parts`` wide whatever the session conf says. The
+      message join is left to the planner: a broadcast of the labels (the
+      small-graph case) adds no exchange; a sort-merge join shuffles both
+      sides at the session width, which AQE coalesces."""
     from pyspark.sql import Observation
 
     rounds = 0
@@ -1055,6 +1056,7 @@ def _min_label_loop(labels, edges, n, max_rounds, comp_t, converged):
         return (
             cur.select("vec_id", "component")
             .unionByName(msgs)
+            .repartition(parts, "vec_id")
             .groupBy("vec_id")
             .agg(F.min("component").alias("component"))
         )
@@ -1076,6 +1078,7 @@ def _min_label_loop(labels, edges, n, max_rounds, comp_t, converged):
             .unionByName(
                 stepped.select("vec_id", "component").withColumn("old", null_old)
             )
+            .repartition(parts, "vec_id")
             .groupBy("vec_id")
             .agg(F.min("component").alias("component"), F.min("old").alias("old"))
             .observe(

@@ -42,8 +42,8 @@ depends on it.
 
 from __future__ import annotations
 
-import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -350,7 +350,8 @@ def _warm_python_workers(spark: SparkSession) -> None:
     """Spawn + warm one Python worker per core before the first wave (imports
     of numpy/pandas/the verify kernel happen here, not inside wave 0). The
     cluster analog is executor/container warmup; without it the first wave's
-    fetch pays ~N_cores × interpreter-start + import latency."""
+    fetch pays ~N_cores × interpreter-start + import latency. run_campaign
+    runs it on a background thread, so the workers spawn during the prep."""
     n = spark.sparkContext.defaultParallelism
 
     def _w(batches):
@@ -362,6 +363,20 @@ def _warm_python_workers(spark: SparkSession) -> None:
         yield from batches
 
     spark.range(n, numPartitions=n).mapInPandas(_w, "id long").count()
+
+
+def _wave_host_stats(spark: SparkSession, fetches_path: str) -> list:
+    """Per-host (n_sel, n_ok) rows of one committed wave's fetches parquet."""
+    return (
+        spark.read.schema(schemas.FETCHES)
+        .parquet(fetches_path)
+        .groupBy("host")
+        .agg(
+            F.count("*").alias("n_sel"),
+            F.sum(F.when(F.col("status") == "OK", 1).otherwise(0)).alias("n_ok"),
+        )
+        .collect()
+    )
 
 
 def run_campaign(
@@ -377,71 +392,73 @@ def run_campaign(
     the loop early — used by the kill/resume test. Calling again with the
     same catalog_root resumes from the committed watermark.
 
+    The start's independent jobs overlap: the Python-worker warm-up and the
+    politeness-state collect run on background threads while this one
+    writes the prep and derives pending. Both join before the first wave
+    (no start cost moves into wave 0) and re-raise their errors here.
+
     For the whole call, ``spark.sql.execution.arrow.maxRecordsPerBatch`` is
     set SESSION-WIDE to ``cfg.arrow_batch_rows`` (Spark has no per-operator
     form of it) and restored on exit, so any query running concurrently in
     the same session sees ``cfg.arrow_batch_rows``-row Arrow batches."""
     cat = open_catalog(spark, catalog_root)
-
-    if not cat.prepared():
-        # the expensive pass (canonicalize + dedup window + robots gate)
-        # computed ONCE; rejected is then derived by scanning the just-
-        # written files — no recompute. Both sets are written UNPUBLISHED
-        # and land in ONE atomic commit: a kill at any earlier point leaves
-        # only unpublished junk that the re-run overwrites (paths are
-        # deterministic), never a published path to collide with.
-        fp_path = cat.write_unpublished(
-            "frontier_prepared", prepare_frontier(frontier, robots), "prep"
-        )
-        fp = spark.read.schema(schemas.FRONTIER_PREPARED).parquet(fp_path)
-        rej_path = cat.write_unpublished(
-            "rejected",
-            schemas.conform(fp.filter(F.col("reason").isNotNull()), schemas.REJECTED),
-            "prep",
-        )
-        cat.commit(
-            "prep",
-            prewritten={"frontier_prepared": fp_path, "rejected": rej_path},
-            prepared=True,
-        )
-
     arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev_arrow = spark.conf.get(arrow_key, None)
     spark.conf.set(arrow_key, str(cfg.arrow_batch_rows))
-
-    # derive once (resume point), then maintain incrementally in memory;
-    # localCheckpoint materializes each generation and truncates lineage so
-    # plan depth stays O(1) in waves (a persist-chain would preserve
-    # outputPartitioning but accumulates nested cached plans until the JVM
-    # heap gives out). The phase-1 politeness window therefore pays one
-    # hash exchange of the fresh pool per wave in local mode; on a real
-    # cluster the pool lives as an Iceberg table bucketed by (host, salt)
-    # and storage-partitioned reads make that exchange disappear. Retries
-    # (tiny, bounded by one wave's failures) are unioned into this pending
-    # frame at commit time (_wave_loop) and ride the same selection path.
-    _warm_python_workers(spark)
-    salt_width = (
-        cfg.salt_width if cfg.salt_width is not None else choose_salt_width(pool_df(cat))
-    )
-    pending = pending_df(cat, salt_width).localCheckpoint(eager=True)
-    # politeness state resumes from the ledger too: the distributed fold
-    # replays exactly what the in-run updates computed, and its per-host
-    # aggregate comes to the driver (bloom-bitmap pattern; see _HostState).
-    # A catalog with no fetches file set has an empty ledger, hence empty
-    # state, so a fresh campaign skips the fold job.
-    hstate = _HostState(
-        host_state_df(cat, robots, cfg).collect() if cat.file_sets("fetches") else [],
-        robots_dim(robots, cfg.default_budget).collect(),
-        cfg,
-    )
-
-    wave_id = cat.watermark() + 1
+    bg = ThreadPoolExecutor(max_workers=2)
     try:
+        warm = bg.submit(_warm_python_workers, spark)
+        # politeness state resumes from the ledger too (see _HostState); a
+        # catalog with no fetches file set, i.e. a fresh one, skips the fold
+        politeness = bg.submit(lambda: (
+            host_state_df(cat, robots, cfg).collect() if cat.file_sets("fetches") else [],
+            robots_dim(robots, cfg.default_budget).collect(),
+        ))
+        if not cat.prepared():
+            # the expensive pass (canonicalize + dedup window + robots gate)
+            # computed ONCE; rejected is then derived by scanning the just-
+            # written files — no recompute. Both sets are written UNPUBLISHED
+            # and land in ONE atomic commit: a kill at any earlier point
+            # leaves only unpublished junk that the re-run overwrites (paths
+            # are deterministic), never a published path to collide with.
+            fp_path = cat.write_unpublished(
+                "frontier_prepared", prepare_frontier(frontier, robots), "prep"
+            )
+            fp = spark.read.schema(schemas.FRONTIER_PREPARED).parquet(fp_path)
+            rej_path = cat.write_unpublished(
+                "rejected",
+                schemas.conform(fp.filter(F.col("reason").isNotNull()), schemas.REJECTED),
+                "prep",
+            )
+            cat.commit(
+                "prep",
+                prewritten={"frontier_prepared": fp_path, "rejected": rej_path},
+                prepared=True,
+            )
+
+        # derive once (resume point), then maintain incrementally in memory;
+        # localCheckpoint materializes each generation and truncates lineage
+        # so plan depth stays O(1) in waves (a persist-chain would preserve
+        # outputPartitioning but accumulates nested cached plans until the
+        # JVM heap gives out). The phase-1 politeness window therefore pays
+        # one hash exchange of the fresh pool per wave in local mode; on a
+        # real cluster the pool lives as an Iceberg table bucketed by (host,
+        # salt) and storage-partitioned reads make that exchange disappear.
+        # Retries (tiny, bounded by one wave's failures) are unioned into
+        # this pending frame at commit time (_wave_loop) and ride the same
+        # selection path. Fresh, it plans as one pool scan (see cat.read).
+        salt_width = (
+            cfg.salt_width if cfg.salt_width is not None else choose_salt_width(pool_df(cat))
+        )
+        pending = pending_df(cat, salt_width).localCheckpoint(eager=True)
+        hstate = _HostState(*politeness.result(), cfg)
+        warm.result()
         _wave_loop(
-            spark, cat, robots, images, cfg, stop_after_waves, pending, wave_id,
-            salt_width, hstate,
+            spark, cat, robots, images, cfg, stop_after_waves, pending,
+            cat.watermark() + 1, salt_width, hstate, bg,
         )
     finally:
+        bg.shutdown()  # waits, so no background job outlives the call
         if prev_arrow is None:
             spark.conf.unset(arrow_key)
         else:
@@ -451,7 +468,7 @@ def run_campaign(
 
 def _wave_loop(
     spark, cat, robots, images, cfg, stop_after_waves, pending, wave_id, salt_width,
-    hstate,
+    hstate, bg,
 ):
     P = spark.sparkContext.defaultParallelism
     waves_done = 0
@@ -527,32 +544,10 @@ def _wave_loop(
             watermark=wave_id,
         )
 
-        # per-host outcome aggregate for the politeness state — a 2-column
-        # columnar scan of the just-committed wave parquet, submitted on a
-        # background thread so it runs CONCURRENTLY with the pending-update
-        # checkpoint below and costs ~zero wall time (both read immutable
-        # committed data; Spark schedules jobs from separate threads fine)
-        stats_box: dict = {}
-
-        def _collect_stats(path=fetches_path, box=stats_box):
-            try:
-                box["rows"] = (
-                    spark.read.schema(schemas.FETCHES)
-                    .parquet(path)
-                    .groupBy("host")
-                    .agg(
-                        F.count("*").alias("n_sel"),
-                        F.sum(
-                            F.when(F.col("status") == "OK", 1).otherwise(0)
-                        ).alias("n_ok"),
-                    )
-                    .collect()
-                )
-            except BaseException as e:  # surfaced at join below
-                box["err"] = e
-
-        stats_thread = threading.Thread(target=_collect_stats, daemon=True)
-        stats_thread.start()
+        # per-host outcome aggregate for the politeness state, scanned on a
+        # background thread CONCURRENTLY with the pending-update checkpoint
+        # below, so it costs ~zero wall time
+        stats = bg.submit(_wave_host_stats, spark, fetches_path)
 
         # incremental pending update (in-memory mirror of pending_df over the
         # new snapshot): drop this wave's rows, add this wave's retryable
@@ -583,10 +578,7 @@ def _wave_loop(
         )
         # politeness bucket + abuse record for the <= hosts-in-wave touched
         # hosts — fed by the overlapped stats scan
-        stats_thread.join()
-        if "err" in stats_box:
-            raise stats_box["err"]
-        hstate.update(wave_id, stats_box["rows"])
+        hstate.update(wave_id, stats.result())
         selected.unpersist()
 
         # periodic maintenance: compaction is its own atomic commit after
